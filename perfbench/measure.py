@@ -1,8 +1,12 @@
 """Statistics and span bookkeeping for the benchmark (no Spark imports).
 
-- ``percentile`` / ``reportable_percentile``: the sample-count rule. A
-  percentile is reported only when at least ``MIN_TAIL`` samples lie
-  beyond it, so p90 needs 100 samples and p50 needs 20.
+- ``percentile`` / ``reportable_percentile``: the sample-count rule for
+  the tail percentile ``op_p90_s``: it is reported only when at least
+  ``MIN_TAIL`` samples lie beyond it, so it needs 100 samples. Medians
+  (``median``) are reported at any sample count, with the count.
+- ``stolen_s`` / ``Stopwatch``: CPU time the hypervisor took from the
+  machine, and wall time less that time per CPU, so that a busy host
+  sharing the machine stretches a measured interval less.
 - ``Tracer``: in-memory spans (name, start, end, parent, op id) recorded
   around calls into the program's layers, plus ``self_times``: a span's
   duration minus the part of its interval its child spans cover.
@@ -13,6 +17,7 @@ from __future__ import annotations
 import functools
 import json
 import math
+import os
 import statistics
 import time
 from collections.abc import Callable, Iterator
@@ -20,6 +25,8 @@ from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
 MIN_TAIL = 10
+CLOCK_TICKS = os.sysconf("SC_CLK_TCK")
+NCPU = os.cpu_count() or 1
 
 
 def percentile(values: list[float], q: float) -> float:
@@ -46,6 +53,29 @@ def reportable_percentile(values: list[float], q: float) -> float | None:
 
 def median(values: list[float]) -> float:
     return statistics.median(values)
+
+
+def stolen_s() -> float:
+    """CPU seconds the hypervisor has taken from this machine's CPUs
+    since boot (the steal column of /proc/stat), summed over CPUs."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / CLOCK_TICKS
+
+
+class Stopwatch:
+    """Adds up the wall time of timed blocks, less the CPU time stolen
+    from the machine during them divided by its CPUs."""
+
+    def __init__(self) -> None:
+        self.seconds = 0.0
+
+    @contextmanager
+    def timing(self) -> Iterator[None]:
+        t, stolen = time.perf_counter(), stolen_s()
+        try:
+            yield
+        finally:
+            self.seconds += time.perf_counter() - t - (stolen_s() - stolen) / NCPU
 
 
 @dataclass

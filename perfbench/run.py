@@ -8,8 +8,10 @@ Run discipline (README.md in this directory has the reasons):
   heap, console progress off, Spark temp files inside the checkout;
 - the checkout root on ``PYTHONPATH`` so Python UDF workers can import
   the package;
-- set-up = session start, input generation, one checked cold pass and
-  the workload's warm-up passes; only later passes are timed;
+- set-up = session start, input generation and one checked cold pass;
+  only later passes are timed. ``setup_s`` counts the session start and
+  the program's calls in the cold pass, not the benchmark's own input
+  generation and checks;
 - between ops, outside the timed region, persisted RDDs are counted and
   released, and pipeline outputs are checked, then deleted;
 - a fixed number of timed passes, derived from ``--seconds`` and the
@@ -48,6 +50,8 @@ sys.path.insert(0, HERE)
 
 import measure  # noqa: E402
 import workloads  # noqa: E402
+
+STOLEN0 = measure.stolen_s()
 
 # (module, function, span name) traced in ``--trace 1`` passes. Every
 # module attribute bound to the function is patched, so callers that
@@ -182,10 +186,6 @@ class SparkCounters:
         return out
 
 
-CLOCK_TICKS = os.sysconf("SC_CLK_TCK")
-NCPU = os.cpu_count() or 1
-
-
 def tree_cpu_s() -> float:
     """CPU seconds used so far by this process and all its live
     descendants (the gateway JVM, the Python worker daemon and its
@@ -208,14 +208,7 @@ def tree_cpu_s() -> float:
         kids = [p for p, pp in parent.items() if pp in frontier and p not in tree]
         tree.update(kids)
         frontier = kids
-    return sum(ticks.get(p, 0) for p in tree) / CLOCK_TICKS
-
-
-def stolen_s() -> float:
-    """CPU seconds the hypervisor has taken from this machine's CPUs
-    since boot (the steal column of /proc/stat), summed over CPUs."""
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8]) / CLOCK_TICKS
+    return sum(ticks.get(p, 0) for p in tree) / measure.CLOCK_TICKS
 
 
 def jit_cpu_s(jvm_pid: int) -> float:
@@ -231,7 +224,7 @@ def jit_cpu_s(jvm_pid: int) -> float:
             continue
         if "CompilerThre" in stat[stat.index("(") : stat.rindex(")")]:
             total += sum(int(x) for x in stat[stat.rindex(")") + 2 :].split()[11:13])
-    return total / CLOCK_TICKS
+    return total / measure.CLOCK_TICKS
 
 
 def vm_hwm_mb(pid: int | str) -> float:
@@ -276,7 +269,7 @@ class Runner:
                 if traced:
                     self.tracer.op = op
                     sc.setJobGroup(f"a{op}", "op")
-                c, j, st = tree_cpu_s(), jit_cpu_s(self.jvm_pid), stolen_s()
+                c, j, st = tree_cpu_s(), jit_cpu_s(self.jvm_pid), measure.stolen_s()
                 t = time.perf_counter()
                 try:
                     with self.tracer.span("bench.op") if traced else contextlib.nullcontext():
@@ -286,7 +279,7 @@ class Runner:
                 latencies.append(time.perf_counter() - t)
                 jit.append(jit_cpu_s(self.jvm_pid) - j)
                 cpu.append(tree_cpu_s() - c - jit[-1])
-                stolen.append(stolen_s() - st)
+                stolen.append(measure.stolen_s() - st)
                 names.append(q)
                 ops.append(op)
                 if traced:
@@ -370,9 +363,10 @@ def end_to_end(w, setup_s: float, passes: list[dict]) -> tuple[dict, list[str]]:
     p90 = measure.reportable_percentile(lat, 90)
     # Time the hypervisor took from the machine's CPUs during a pass,
     # per CPU, is time the pass could not run.
-    unstolen = [p["time"] - p["stolen"] / NCPU for p in passes]
+    unstolen = [p["time"] - p["stolen"] / measure.NCPU for p in passes]
     notes = [
-        f"pass_p50_s = {p50:.4f} s (n={len(times)}); wall_s = {sum(times):.4f} s; "
+        f"pass_p50_s = {p50:.4f} s (n={len(times)}), {measure.median(unstolen):.4f} s less stolen CPU / CPUs; "
+        f"wall_s = {sum(times):.4f} s; "
         f"rows_per_s = {w.input_rows / p50:.1f} over {w.input_rows} input rows",
         f"op_p50_s = {measure.median(lat):.4f} s (n={len(lat)}); op_p90_s = "
         f"{'n/a' if p90 is None else f'{p90:.4f}'} s (needs >= {measure.MIN_TAIL} samples beyond it)",
@@ -494,13 +488,14 @@ def main(argv: list[str] | None = None) -> int:
         spark = start_session(work)
         session_s = time.perf_counter() - t
         runner = Runner(w, spark, trace)
-        t = time.perf_counter()
+        t, stolen_at_prepare = time.perf_counter(), measure.stolen_s()
         for problem in w.prepare(spark, work, args.seed):
             runner.fail(problem)
         runner.attempted += len(w.queries)
         prepare_s = time.perf_counter() - t
-        warmups = [runner.run_pass()["time"] for _ in range(w.warmup_passes)]
-        setup_s = time.perf_counter() - T0
+        # process start, imports and session start, less stolen CPU time
+        started_s = t - T0 - (stolen_at_prepare - STOLEN0) / measure.NCPU
+        setup_s = started_s + w.cold.seconds
 
         n = timed_passes(args.seconds, w.nominal_pass_s)
         untraced, traced = [], []
@@ -511,7 +506,7 @@ def main(argv: list[str] | None = None) -> int:
 
         header = (
             f"perfbench workload={w.name} seed={args.seed} master=local[{CORES}] "
-            f"timed_passes={len(untraced) + len(traced)} warmup_passes={w.warmup_passes} trace={args.trace}"
+            f"timed_passes={len(untraced) + len(traced)} trace={args.trace}"
         )
         if trace:
             metrics, notes = per_layer(w, runner, untraced, traced, session_s, peak_mb)
@@ -524,8 +519,9 @@ def main(argv: list[str] | None = None) -> int:
             metrics, notes = end_to_end(w, setup_s, untraced)
             notes.append(f"peak RSS, JVM + driver VmHWM = {peak_mb:.1f} MB (per-layer memory.peak_rss_mb)")
         notes.append(
-            f"set-up: session {session_s:.2f} s, inputs + checked cold pass {prepare_s:.2f} s, "
-            f"warm-up passes {' '.join(f'{x:.2f}' for x in warmups) or 'none'} s"
+            f"set-up: process and session start {started_s:.2f} s (session {session_s:.2f} s), "
+            f"program calls of the cold pass {w.cold.seconds:.2f} s, both less stolen CPU / CPUs; "
+            f"wall time to the first timed pass {t - T0 + prepare_s:.2f} s, with input generation and checks"
         )
     finally:
         if spark is not None:
