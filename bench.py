@@ -510,7 +510,10 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
 
     from car_insurance_data_pipeline_spark_spark.plans.catalog import all_queries
-    from car_insurance_data_pipeline_spark_spark.session import get_session
+    from car_insurance_data_pipeline_spark_spark.session import (
+        get_session,
+        release_all,
+    )
 
     spark = get_session(app_name="bench")
     qs = all_queries()
@@ -535,8 +538,6 @@ def main() -> None:
     # Interleave rounds (ABC ABC ABC, not AAA BBB CCC) so one query's
     # repeats don't all land in the same GC/compilation window.
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    import gc
-
     from pyspark.sql import functions as F
 
     def calibration() -> float:
@@ -555,28 +556,21 @@ def main() -> None:
 
     cal_samples: list[float] = []
 
-    def release_blocks() -> None:
-        # Each bench query is an independent job; in production each
-        # would run in its own session.  localCheckpoint() persists
-        # its RDD, and those blocks outlive the query (1–4 per dedup/
-        # packing query, ×48 queries ×3 reps) — the accumulated
-        # storage-memory pressure measurably inflates the matmul
-        # queries (q41 2.2 s isolated → 5.2 s under suite pressure).
-        # Unpersist everything between queries so each timing reflects
-        # the plan, not its neighbours' leftovers.
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in m.values():
-            jrdd.unpersist(False)
-        spark.catalog.clearCache()
-        gc.collect()
-
     for _ in range(reps):
         cal_samples.append(calibration())
         for name in HEADLINE:
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             samples[name].append(time.perf_counter() - t0)
-            release_blocks()
+            # Each bench query is an independent job; in production
+            # each would run in its own session. Checkpoint blocks
+            # outlive the query (1–4 per dedup/packing query, ×48
+            # queries ×3 reps) — the accumulated storage-memory
+            # pressure measurably inflates the matmul queries (q41
+            # 2.2 s isolated → 5.2 s under suite pressure). Release
+            # everything between queries so each timing reflects the
+            # plan, not its neighbours' leftovers.
+            release_all(spark)
     cal_samples.append(calibration())
     medians: dict[str, float] = {}
     for name in HEADLINE:

@@ -32,12 +32,6 @@ def from_unix_millis(col: Column | str) -> Column:
     return F.timestamp_millis(_c(col).try_cast("double").try_cast("long"))
 
 
-def epoch_seconds(col: Column | str) -> Column:
-    """timestamp → epoch seconds (long), for second-granularity diffs
-    (scripts/08_load_driver_risk_scores.py:218-220)."""
-    return _c(col).cast("long")
-
-
 def date_dimension(spark: SparkSession, start: str, end: str) -> DataFrame:
     """Calendar dimension, one row/day in [start, end].
 

@@ -1,12 +1,10 @@
 """Text-analysis functions for large-scale training-data pipelines.
 
 North-star extensions (BASELINE.json): token counting, quality
-scoring, language ID, fingerprinting, shingling, MinHash, SimHash.
-Everything here is built-in Column expressions (JVM-side, codegen) —
-no Python UDFs — so the hot path over a 100 TB documents table stays
-vectorized. Hash-based ops use xxhash64 (Spark-native, 64-bit,
-seedable), so MinHash/SimHash signatures are deterministic across
-runs and executors.
+scoring, language ID, fingerprinting, shingling. Everything here is
+built-in Column expressions (JVM-side, codegen) — no Python UDFs — so
+the hot path over a 100 TB documents table stays vectorized. The
+MinHash and SimHash dedup stages live in ``operators/dedup.py``.
 """
 
 from __future__ import annotations
@@ -90,79 +88,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     return F.when(n_sh <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(idx, lambda i: F.array_join(F.slice(ws, i + 1, k), " "))
     )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature (array<long>) over a shingle array.
-
-    h_i(s) = xxhash64(s, seed=i); signature[i] = min over shingles.
-    Deterministic, JVM-side, O(|shingles| * num_hashes) but fully
-    codegen'd — at 100 TB this is a narrow map over the documents
-    scan, no shuffle.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Banded LSH keys from a MinHash signature: array of
-    (band_id, hash(band slice)) strings. Documents sharing any band
-    key are near-dup candidates — candidate generation is then a
-    groupBy/join on the exploded key, which shuffles only the
-    (doc_id, band_key) pairs, never the documents themselves.
-    """
-    return F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(b),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(signature, b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
-def simhash64(col: Column | str, k: int = 2) -> Column:
-    """64-bit SimHash over word k-shingles, composed from built-ins.
-
-    For each bit b: sum over shingles of (+1 if bit set else -1);
-    bit b of the result = sign of the sum. Near-dup docs differ in
-    few bits (Hamming distance).
-    """
-    sh = word_shingles(col, k)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    bit_sums = [
-        F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                h.bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1
-            ).otherwise(-1),
-        )
-        for b in range(64)
-    ]
-    out = F.lit(0).cast("long")
-    for b, s in enumerate(bit_sums):
-        out = out.bitwiseOR(
-            F.when(s > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
 
 
 def hamming64(a: Column, b: Column) -> Column:

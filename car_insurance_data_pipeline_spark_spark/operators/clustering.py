@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
+
 
 def _assign(
     v: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
@@ -415,7 +417,7 @@ def dbscan_clusters(
         F.count("*").alias("n")
     )
     core = counts.filter(F.col("n") >= min_pts).select("id")
-    core = core.localCheckpoint(eager=False)  # 3 consumers below
+    core = checkpoint(core)  # 3 consumers below
     ce = (
         nbr.filter(F.col("id_a") != F.col("id_b"))
         .join(core.withColumnRenamed("id", "id_a"), "id_a", "left_semi")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.functions.text import tokens
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 def exact_dedup(
@@ -231,7 +232,7 @@ def jaccard_pairs(
     # window pipeline is not an exchange-sharing point — see the
     # measurement note in _candidate_intersections
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     inter = _candidate_intersections(sh, id_col, max_postings)
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
@@ -277,7 +278,7 @@ def shared_span_pairs(
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
     # two consumer branches (dfreq + the keyed join) — run the span
     # window pipeline once (see _candidate_intersections note)
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     return _candidate_intersections(sh, id_col, max_postings).select(
         "doc_a", "doc_b"
     )
@@ -316,7 +317,7 @@ def span_star_edges(
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
     # two consumer branches (grp + the probe join) — run the span
     # window pipeline once (see _candidate_intersections note)
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     grp = sh.groupBy("s").agg(
         F.count("*").alias("__df"), F.min(id_col).alias("doc_a")
     )
@@ -365,7 +366,7 @@ def incremental_span_dedup(
     # (house pattern: the minhash signature stage above)
     sh_batch = _shingle_hashes(
         batch, id_col, text_col, k, distinct=True
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint, eager=True)
     vs_corpus = (
         sh_batch.join(sh_corpus.select("s"), "s", "leftsemi")
         .select(id_col)
@@ -583,7 +584,7 @@ def minhash_lsh_pairs(
     # released by the ContextCleaner as soon as the returned
     # DataFrame is dropped, so repeated calls in a long-lived session
     # don't accumulate cached partitions.
-    sig = sig.localCheckpoint(eager=True)
+    sig = checkpoint(sig, eager=True)
     keys = sig.select(id_col, F.explode("band_keys").alias("bk"))
     a, b = keys.alias("a"), keys.alias("b")
     cand = (
@@ -779,7 +780,7 @@ def count_prefix_candidates(
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
     # three consumers (sizes, dfreq, the ranked join) — checkpoint
     # so shingling runs once, exactly as in prefix_jaccard_pairs
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     ranked = _prefix_tokens(sh, id_col, sizes, t_num, t_den)
     return _candidate_volume(ranked)
@@ -879,10 +880,10 @@ def near_dup_pairs(
         )
     t_num, t_den = _ratio(threshold)
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     ranked = _prefix_tokens(sh, id_col, sizes, t_num, t_den)
-    ranked = ranked.localCheckpoint(eager=False)
+    ranked = checkpoint(ranked)
     # budget_rows pins an ABSOLUTE candidate budget — for callers
     # whose output must be a pure function of the data (q178's
     # oracle-bearing catalog query passes the calibrated 3.2M
@@ -951,12 +952,12 @@ def prefix_jaccard_pairs(
     """
     t_num, t_den = _ratio(threshold)
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     ranked = _prefix_tokens(sh, id_col, sizes, t_num, t_den)
     # two join branches below consume `ranked`; checkpoint so the
     # df-join + per-doc prefix window runs once, not per-branch
-    ranked = ranked.localCheckpoint(eager=False)
+    ranked = checkpoint(ranked)
     return _prefix_exact_from(
         sh, sizes, ranked, id_col, t_num, t_den
     )
@@ -1175,7 +1176,7 @@ def containment_pairs(
     sh = _shingle_hashes(df, id_col, text_col, k, distinct=True)
     # four consumer branches, as in jaccard_pairs — run the shingle
     # window pipeline once (see _candidate_intersections note)
-    sh = sh.localCheckpoint(eager=False)
+    sh = checkpoint(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     inter = _candidate_intersections(sh, id_col, max_postings)
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))

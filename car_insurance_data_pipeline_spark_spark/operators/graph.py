@@ -10,15 +10,20 @@ one machine. This is the canonical way to turn near-dup PAIRS
 (jaccard_pairs / minhash_lsh_pairs / embedding_dup_pairs) into
 dedup CLUSTERS with a keep-one survivor per cluster.
 
-Each iteration localCheckpoints the edge set: iterative DataFrame
-algorithms must cut lineage or the plan doubles per round (and the
-eager checkpoint gives the convergence check a materialized input).
+Each iteration checkpoints its state: iterative DataFrame algorithms
+must cut lineage or the plan doubles per round. Every cut goes through
+``session.checkpoint`` — executor-local blocks by default, reliable
+files under ``sparkContext.setCheckpointDir`` when one is set — and
+every superseded frame is freed through ``session.release``, so the
+loops here carry no durability option of their own.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from car_insurance_data_pipeline_spark_spark.session import checkpoint, release
 
 
 def _normalize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -69,78 +74,12 @@ def _small_star(e: DataFrame) -> DataFrame:
     return nbrs.unionByName(self_edges).filter(F.col("u") < F.col("v")).distinct()
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Deterministically free a SUPERSEDED checkpoint's storage.
-
-    localCheckpoint blocks are otherwise released only when the
-    py4j-held JVM object is GC'd (ContextCleaner) — unpredictable,
-    and an O(log n)-round loop would pin that many edge-set copies
-    in executor storage. Reliable (`df.checkpoint()`) frames are
-    worse: Spark deletes their FILES only under
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (off
-    by default), so a long loop would leak one full frame copy per
-    iteration on durable storage — we read the RDD's
-    getCheckpointFile() and delete that directory eagerly. Callers
-    only pass frames no longer reachable from any live plan (the
-    successor checkpoint is already materialized), so deletion is
-    safe. The analyzed plan of a checkpointed DataFrame is a
-    LogicalRDD whose rdd() IS the persisted RDD. Best-effort:
-    guarded because the internal accessor path is not public API
-    (a miss only delays release to the ContextCleaner / the
-    cleanCheckpoints conf).
-    """
-    try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        rdd.unpersist(False)
-        cf = rdd.getCheckpointFile()
-        if cf is not None and cf.isDefined():
-            sc = df.sparkSession.sparkContext
-            path = sc._jvm.org.apache.hadoop.fs.Path(cf.get())
-            fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-            fs.delete(path, True)
-    except Exception:
-        pass
-
-
-_CKPT_MODES = ("auto", "local", "reliable")
-
-
-def _make_ckpt(spark, mode: str):
-    """Resolve a checkpoint policy into a ``df -> df`` callable used
-    by every iterative loop in this module.
-
-    ``local`` stores checkpoint blocks on executors — fast, but an
-    executor loss mid-loop is fatal at cluster scale (the blocks die
-    with the executor and lineage was truncated). ``reliable`` writes
-    to the directory set via ``sparkContext.setCheckpointDir`` (HDFS /
-    object store on a real cluster), so a lost executor recomputes
-    from durable files instead of killing the job. ``auto`` (the
-    default everywhere) picks reliable when a checkpoint dir is
-    configured and local otherwise — the production durability story
-    falls out of cluster configuration, not code edits.
-    """
-    if mode not in _CKPT_MODES:
-        raise ValueError(f"checkpoint must be one of {_CKPT_MODES}, got {mode!r}")
-    has_dir = spark.sparkContext.getCheckpointDir() is not None
-    if mode == "auto":
-        mode = "reliable" if has_dir else "local"
-    if mode == "reliable":
-        if not has_dir:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(...) to be set"
-            )
-        return lambda df, eager=True: df.checkpoint(eager=eager)
-    return lambda df, eager=True: df.localCheckpoint(eager=eager)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
     driver_threshold: int = 500_000,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """Component label per node: columns (node, component), where
     component = the minimum node id reachable from ``node``. Every
@@ -173,8 +112,7 @@ def connected_components(
     # is never re-executed when the result materializes.
     # lazy: the seed checksum below is the materializing action for
     # both checkpoints (raw caches as e's parent in the same job)
-    ck = _make_ckpt(edges.sparkSession, checkpoint)
-    raw = ck(edges.select(src, dst), eager=False)
+    raw = checkpoint(edges.select(src, dst))
     # self-loop-only nodes vanish in _normalize's u<v cut; keep their
     # labels alive separately so the emitted node set matches the
     # documented contract
@@ -183,7 +121,7 @@ def connected_components(
         .select(F.col(src).alias("node"), F.col(src).alias("component"))
         .distinct()
     )
-    e = ck(_normalize(raw, src, dst), eager=False)
+    e = checkpoint(_normalize(raw, src, dst))
 
     def _checksum(df: DataFrame):
         chk = df.agg(
@@ -236,7 +174,7 @@ def connected_components(
                 ]
             ),
         )
-        _release_checkpoint(e)
+        release(e)
         return (
             lab.unionByName(selfs)
             .groupBy("node")
@@ -250,9 +188,9 @@ def connected_components(
         # materialize + checksum). The stale release must come AFTER
         # that action — the new edge set derives from the stale
         # blocks, whose lineage a prior checkpoint already truncated.
-        e = ck(_small_star(_large_star(e)), eager=False)
+        e = checkpoint(_small_star(_large_star(e)))
         cur = _checksum(e)
-        _release_checkpoint(stale)
+        release(stale)
         if cur == prev:
             break
         prev = cur
@@ -316,7 +254,6 @@ def pagerank(
     damping: float = 0.85,
     n_iter: int = 15,
     driver_threshold: int = 500_000,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """PageRank over a directed edge list → (node, rank), ranks
     summing to 1. The iterative-DataFrame companion to
@@ -327,7 +264,7 @@ def pagerank(
     Per iteration: contributions are one (rank ⋈ out-degree-edges)
     join + one sum shuffle; dangling mass (nodes with no out-edges)
     is folded in as a 1-row broadcast, IN-PLAN — no per-iteration
-    driver action. The rank table localCheckpoints every few
+    driver action. The rank table checkpoints every few
     iterations to cut lineage, releasing the previous checkpoint's
     blocks — the standard Pregel-style loop shape; the static
     edge+degree table checkpoints once.
@@ -340,25 +277,25 @@ def pagerank(
     pinned in tests for both paths). Pass ``driver_threshold=0`` to
     force the distributed loop.
     """
-    ck = _make_ckpt(edges.sparkSession, checkpoint)
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
     # lazy: the dispatch count() materializes the blocks (r12 — the
     # hits()/r11-advice pattern applied to its three siblings)
-    e = ck(e, eager=False)
+    e = checkpoint(e)
     if e.count() <= driver_threshold:
         out = _pagerank_driver(edges.sparkSession, e, damping, n_iter)
-        _release_checkpoint(e)
+        release(e)
         return out
-    nodes = ck(
+    nodes = checkpoint(
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("t").alias("node")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     deg = e.groupBy("s").agg(F.count("*").alias("deg"))
-    ed = ck(e.join(deg, "s"))
+    ed = checkpoint(e.join(deg, "s"), eager=True)
     has_out = ed.select(F.col("s").alias("node")).distinct()
     # dangling-mass bookkeeping (a left-anti scan + a 1-row broadcast
     # per iteration) is only needed if some node HAS no out-edges;
@@ -368,7 +305,7 @@ def pagerank(
     # bit-identical either way.
     has_dangling = has_out.count() < n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    ranks = ck(ranks)
+    ranks = checkpoint(ranks, eager=True)
     # checkpoint every few iterations, not every one: a lineage 3
     # plans deep is still tiny, and each eager checkpoint is a full
     # job at driver pace — the same lazy-materialization trade
@@ -416,15 +353,15 @@ def pagerank(
                 ).alias("rank"),
             )
         if it % checkpoint_every == checkpoint_every - 1 or it == n_iter - 1:
-            ranks = ck(ranks)
-            _release_checkpoint(last_ckpt)
+            ranks = checkpoint(ranks, eager=True)
+            release(last_ckpt)
             last_ckpt = ranks
     # the final rank table is a self-contained checkpoint; the static
     # node and edge+degree checkpoints are no longer reachable from
     # it — release them now instead of waiting on py4j GC (the same
     # discipline as the per-iteration release above)
-    _release_checkpoint(nodes)
-    _release_checkpoint(ed)
+    release(nodes)
+    release(ed)
     return ranks
 
 
@@ -480,7 +417,6 @@ def hits(
     dst: str = "dst",
     n_iter: int = 6,
     driver_threshold: int = 2_000_000,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999; public literature)
     over a bipartite edge list → (kind, node, score): ``n_iter``
@@ -511,7 +447,6 @@ def hits(
     edges. The edge frame feeds 2·n_iter consumers, so it is lazily
     checkpointed once (one scan+distinct total).
     """
-    ck = _make_ckpt(edges.sparkSession, checkpoint)
     e = (
         edges.select(F.col(src).alias("c"), F.col(dst).alias("p"))
         .distinct()
@@ -519,10 +454,10 @@ def hits(
     # lazy: the dispatch count() below materializes the blocks —
     # eager=True would run a SECOND construction-time job first
     # (r11 advice; matches the bfs_distances pattern)
-    e = ck(e, eager=False)
+    e = checkpoint(e)
     if e.count() <= driver_threshold:
         out = _hits_driver(edges.sparkSession, e, n_iter)
-        _release_checkpoint(e)
+        release(e)
         return out
     from pyspark.sql import Window
 
@@ -583,7 +518,6 @@ def label_propagation(
     dst: str = "dst",
     n_iter: int = 5,
     driver_threshold: int = 500_000,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """SYNCHRONOUS label propagation (community detection) over an
     undirected edge list → (node, label). Labels start as node ids;
@@ -620,19 +554,19 @@ def label_propagation(
     sym = e.unionByName(
         e.select(F.col("t").alias("s"), F.col("s").alias("t"))
     ).distinct()
-    ck = _make_ckpt(edges.sparkSession, checkpoint)
     # lazy: the dispatch count() below materializes the blocks
-    sym = ck(sym, eager=False)
+    sym = checkpoint(sym)
     n_edges = sym.count()
     if n_edges <= driver_threshold:
         rows = [(r.s, r.t) for r in sym.collect()]
         out = _label_propagation_driver(edges.sparkSession, rows, n_iter)
-        _release_checkpoint(sym)
+        release(sym)
         return out
-    labels = ck(
+    labels = checkpoint(
         sym.select(F.col("s").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
+        .select("node", F.col("node").alias("label")),
+        eager=True,
     )
     last_ckpt = labels
     checkpoint_every = 3
@@ -654,10 +588,10 @@ def label_propagation(
             .select("node", F.col("m.label").alias("label"))
         )
         if it % checkpoint_every == checkpoint_every - 1 or it == n_iter - 1:
-            labels = ck(labels)
-            _release_checkpoint(last_ckpt)
+            labels = checkpoint(labels, eager=True)
+            release(last_ckpt)
             last_ckpt = labels
-    _release_checkpoint(sym)
+    release(sym)
     return labels
 
 
@@ -704,7 +638,6 @@ def bfs_distances(
     max_hops: int,
     node_col: str = "node",
     driver_threshold: int = 2_000_000,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """Multi-source breadth-first hop distances, bounded at
     ``max_hops`` — frontier-expansion BFS as iterated DataFrame ops.
@@ -723,7 +656,7 @@ def bfs_distances(
     rows whose dist == hop. This single-aggregation round replaced
     an earlier distinct + anti-join formulation — same results
     (equality-tested), one exchange per hop instead of two, measured
-    ~3× faster at sf0.1. State is eagerly localCheckpointed per
+    ~3× faster at sf0.1. State is eagerly checkpointed per
     round (the Kiveris-loop discipline — lineage would double per
     hop) and superseded checkpoints are released. The state is O(V)
     rows of (node, dist) — never adjacency — and every exchange is
@@ -731,13 +664,8 @@ def bfs_distances(
     O(E) and the plan holds on a 1000-executor cluster. For
     high-diameter graphs swap the bounded loop for the same
     convergence-checked cadence connected_components uses (checksum
-    of frontier size per round). ``checkpoint`` selects durability:
-    ``"reliable"`` (or ``"auto"`` with a checkpoint dir set) writes
-    round state to the configured checkpoint directory so an
-    executor loss mid-loop recomputes instead of failing — the
-    production setting on a real cluster.
+    of frontier size per round).
     """
-    ck = _make_ckpt(edges.sparkSession, checkpoint)
     # the edge frame is probed EVERY hop — checkpoint it once so an
     # expensive edge-building plan (e.g. q144's lineitem self-join)
     # never re-executes per round. Lazy: the state materialization
@@ -756,7 +684,7 @@ def bfs_distances(
         root = None
     we_ckpted = root != "LogicalRDD"
     if we_ckpted:
-        edges = ck(edges, eager=False)
+        edges = checkpoint(edges)
     # Adaptive small-graph path (the pagerank/label_propagation/hits
     # contract; optimization r11): at or below ``driver_threshold``
     # directed edges the graph is driver-bounded by contract and the
@@ -776,12 +704,13 @@ def bfs_distances(
         if we_ckpted:
             # only release a checkpoint THIS call created — a
             # caller-passed checkpoint may have other consumers
-            _release_checkpoint(edges)
+            release(edges)
         return out
-    state = ck(
+    state = checkpoint(
         sources.select(F.col(sources.columns[0]).alias(node_col))
         .distinct()
-        .withColumn("dist", F.lit(0))
+        .withColumn("dist", F.lit(0)),
+        eager=True,
     )
     last_ckpt = state
     frontier = state.select(node_col)
@@ -791,12 +720,13 @@ def bfs_distances(
             .select(F.col("v").alias(node_col))
             .withColumn("dist", F.lit(hop))
         )
-        state = ck(
+        state = checkpoint(
             state.unionByName(cand)
             .groupBy(node_col)
-            .agg(F.min("dist").alias("dist"))
+            .agg(F.min("dist").alias("dist")),
+            eager=True,
         )
-        _release_checkpoint(last_ckpt)
+        release(last_ckpt)
         last_ckpt = state
         frontier = state.filter(F.col("dist") == hop).select(node_col)
     return state
@@ -842,7 +772,6 @@ def kcore(
     k: int,
     rounds: int,
     driver_threshold: int = 2_000_000,
-    checkpoint: str = "auto",
 ) -> DataFrame:
     """k-core peeling over a DIRECTED-symmetrized edge list: run
     exactly ``rounds`` iterations of (degree count → keep nodes with
@@ -865,9 +794,8 @@ def kcore(
     released (the Kiveris-loop discipline); no driver-side state at
     any point.
     """
-    ck = _make_ckpt(edges.sparkSession, checkpoint)
     # lazy: the dispatch count() below materializes the blocks
-    sym = ck(edges.select("u", "v"), eager=False)
+    sym = checkpoint(edges.select("u", "v"))
     # Adaptive small-graph path (the pagerank/label_propagation/hits
     # contract; optimization r11): at or below ``driver_threshold``
     # edges, peeling runs driver-side over Arrow-collected numpy
@@ -879,7 +807,7 @@ def kcore(
     # ``driver_threshold=0`` to force the distributed loop.
     if sym.count() <= driver_threshold:
         out = _kcore_driver(edges.sparkSession, sym, k, rounds)
-        _release_checkpoint(sym)
+        release(sym)
         return out
     last_ckpt = sym
     for _ in range(rounds):
@@ -889,11 +817,12 @@ def kcore(
             .filter(F.col("d") >= k)
             .select(F.col("u").alias("n"))
         )
-        sym = ck(
+        sym = checkpoint(
             sym.join(keep, sym["u"] == keep["n"], "left_semi")
-            .join(keep, sym["v"] == keep["n"], "left_semi")
+            .join(keep, sym["v"] == keep["n"], "left_semi"),
+            eager=True,
         )
-        _release_checkpoint(last_ckpt)
+        release(last_ckpt)
         last_ckpt = sym
     return sym.groupBy("u").agg(
         F.count("*").cast("int").alias("core_degree")
@@ -1343,7 +1272,7 @@ def clustering_coefficient(
         )
         # two consumers below (the edge stream + the adjacency
         # build); cut the lineage so the orientation builds once
-        oriented = oriented.localCheckpoint(eager=False)
+        oriented = checkpoint(oriented)
         # oriented out-adjacency per node (distinct input edges →
         # unique list entries; O(√m) long by the orientation cap);
         # intersect the two endpoints' lists per edge — the closing

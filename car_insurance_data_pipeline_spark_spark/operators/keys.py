@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
+
 
 def surrogate_key_ordered(
     df: DataFrame, order_cols: list[str], key_name: str = "sk"
@@ -66,7 +68,7 @@ def surrogate_key_ordered(
         )
         .drop("__pid", "__off")
     )
-    out = out.localCheckpoint(eager=True)  # cut lineage before unpersist
+    out = checkpoint(out, eager=True)  # cut lineage before unpersist
     part.unpersist()
     return out
 

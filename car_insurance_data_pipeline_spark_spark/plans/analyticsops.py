@@ -32,6 +32,7 @@ from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
 from car_insurance_data_pipeline_spark_spark.plans.relational import (
     events_with_us,
 )
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 # ---------------------------------------------------------------------------
 # q162 gaps-and-islands: consecutive-day order streaks
@@ -813,7 +814,7 @@ def q171_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts_us div 86400000000").alias("day_nr"),
         "event_type",
     ).distinct()
-    it = it.localCheckpoint(eager=False)
+    it = checkpoint(it)
     nb = (
         it.select("user_id", "day_nr")
         .distinct()
@@ -1744,7 +1745,7 @@ def q320_shapley_attribution(
             .cast("bigint")
             .alias("val")
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     ch = spark.createDataFrame(
         [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 @query(
@@ -173,7 +174,7 @@ def q184_node_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     return (
         adjacency_jaccard(e)
@@ -290,7 +291,7 @@ def q277_adjacency_sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage when the fork point isn't an exchange). Without it the
     # static plan re-derived the build 5×: 48 parquet scans / 118
     # exchanges at sf0.1 → 2 scans + one shared build after.
-    edges = base.unionByName(clones).localCheckpoint(eager=False)
+    edges = base.unionByName(clones).transform(checkpoint)
     # banding tuned to the J=1.0 target: 4 bands x 8 rows admits a
     # random pair with P = 1-(1-J^8)^4 (J=0.5 -> ~1.5%) vs the
     # default 16x2's ~64% at J=0.25 — ~10x fewer candidates into
@@ -1391,7 +1392,7 @@ def q267_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     return (
         adamic_adar(e, dispatch="exact")
@@ -1467,7 +1468,7 @@ def q279_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     m = und.agg(F.count("*").cast("bigint").alias("m"))
     sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1584,7 +1585,7 @@ def q296_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     sym = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count("*").cast("bigint").alias("d"))

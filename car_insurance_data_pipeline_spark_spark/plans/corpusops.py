@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 # Scan-split probe memo (optimization r12, r11 verdict minor #6):
 # ``df.rdd.getNumPartitions()`` pays an analysis+planning py4j
@@ -270,7 +271,7 @@ def token_budget_select(
             ).alias("quality"),
         )
         .withColumn("bucket", F.floor(F.col("quality") * n_buckets).cast("int"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
 
     # Phase 1: per-bucket totals — one small agg, ≤ n_buckets+1 rows.
@@ -306,7 +307,7 @@ def token_budget_select(
     # could disagree on slice membership.
     ranged = _boundary_slices(
         scored, boundary, boundary_parts, id_col
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint, eager=True)
     # Exact prefix offset per slice: range partition k holds keys
     # strictly before partition k+1's in (quality DESC, id) order, so
     # slice totals accumulated in slice order ARE the global prefix.
@@ -457,12 +458,12 @@ def bigram_lm_quality(
     uni = (
         tok.groupBy("w")
         .agg(F.count("*").alias("cu"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     big = (
         bg.groupBy("w1", "w2")
         .agg(F.count("*").alias("cb"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     q = F.expr(f"(cb * CAST({quantum} AS BIGINT)) div cu")
     per = (
@@ -616,7 +617,7 @@ def q284_waterfill_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("total * 9 DIV 10").alias("b"),
             "n",
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     k = (
         s.filter(
@@ -751,7 +752,7 @@ def q317_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.length("text") >= 3)
         )
         .select("doc_id", "lang")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # Trigrams are BYTE trigrams over the UTF-8 encoding (the CLD2
     # convention): substring on a Spark STRING is O(position) — it
@@ -795,7 +796,7 @@ def q317_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr("substring(b, i, 3)").alias("tri"))
         .groupBy("doc_id", "tri")
         .agg(F.count("*").cast("bigint").alias("m"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # NOTE: no broadcast hint on `d` — it is ONE ROW PER DOCUMENT
     # (corpus-row-sized), exactly the frame class that must never be
@@ -830,7 +831,7 @@ def q317_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / CAST(nd_tot AS DOUBLE)) * 1000000) AS BIGINT)"
             ).alias("prior"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     w = (
         prof.join(tl, "l")

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 @query(
@@ -507,7 +508,7 @@ def q259_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         q234_calibration_bins(spark, sf_dir)
         .select("bin", "n", "n_pos")
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cum = b.select(
@@ -616,7 +617,7 @@ def q260_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = d.select(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ws")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     uni = toks.select(F.explode("ws").alias("w")).groupBy("w").agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -740,7 +741,7 @@ def q261_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_quantity")).cast("bigint").alias("q"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("p"),
     )
-    li = li.localCheckpoint(eager=False)
+    li = checkpoint(li)
 
     def ranks(col: str) -> DataFrame:
         h = li.groupBy(col).agg(F.count("*").alias("cnt"))
@@ -872,7 +873,7 @@ def q262_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("s"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     in_a_obs = (
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) <= "7"
@@ -1179,7 +1180,7 @@ def q268_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lang").isNotNull())
         .groupBy("lang")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     tot = g.agg(F.sum("n_docs").cast("bigint").alias("n"))
     base = g.crossJoin(F.broadcast(tot)).select(
@@ -1624,7 +1625,7 @@ def q273_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "   * (CAST(s1 AS DOUBLE) / n_docs)) / (n_docs - 1), 0.0D))"
             " * 1000) ELSE 0 END AS BIGINT)"
         ).alias("wt"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     tot = w.agg(F.sum("wt").cast("bigint").alias("tw"))
     base = w.crossJoin(F.broadcast(tot)).select(
         "lang",
@@ -1718,7 +1719,7 @@ def q274_clustering_coefficient(
     e = (
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     return (
         clustering_coefficient(e, dispatch="auto")
@@ -2045,7 +2046,7 @@ def q297_ips_offpolicy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("a"),
             F.round(F.col("value") * 1000).cast("bigint").alias("r"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     marg = ev.groupBy("a").agg(F.count("*").cast("bigint").alias("na"))
     tot = marg.agg(F.sum("na").cast("bigint").alias("n"))
@@ -2201,7 +2202,7 @@ def q298_doubly_robust_ope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("a"),
             F.round(F.col("value") * 1000).cast("bigint").alias("r"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     act = ev.groupBy("a").agg(
         F.count("*").cast("bigint").alias("na"),
@@ -2502,7 +2503,7 @@ def q322_rank_biased_overlap(
             .alias("r"),
         )
         .filter(F.col("r") <= 10)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     a = ranked.filter(F.col("half") == 0).select(
         "l_partkey", F.col("r").alias("ra")

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 # Blocking caps the per-block pair count at _MAX_BLOCK^2/2 — the
 # standard record-linkage guard against a degenerate block (e.g. all
@@ -228,9 +229,7 @@ def q134_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def copurchase_oriented_edges(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def copurchase_oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build q135's degree-oriented edge list (src, dst, dst_d):
     each co-purchase edge directed from its lower (degree, node)
     endpoint to its higher one.
@@ -244,11 +243,6 @@ def copurchase_oriented_edges(
     (C(17,2) max on this fixture; order sizes are capped by the
     workload, not the corpus, so the bound holds at 100 TB where a
     self-join's shuffle would double).
-
-    ``checkpoint=False`` returns the raw lineage — tests assert the
-    PRE-checkpoint plan (no cross product in the degree joins),
-    which the checkpointed form hides (localCheckpoint truncates
-    lineage, so q135's own plan can't show these stages).
     """
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     arrs = li.groupBy("l_orderkey").agg(
@@ -288,8 +282,6 @@ def copurchase_oriented_edges(
             ),
         )
     )
-    if not checkpoint:
-        return oe
     # the oriented edge list feeds THREE plan branches (both wedge
     # legs + the closing-edge probe) — checkpoint so the pair
     # generation + distinct + degree joins run once, not three
@@ -298,7 +290,7 @@ def copurchase_oriented_edges(
     # skipping the construction-time job fuses the build into the
     # main job (measured min-of-3 4.40 → 4.24 s, cold first rep
     # 8.4 → 4.7 s at sf0.1).
-    return oe.localCheckpoint(eager=False)
+    return checkpoint(oe)
 
 
 def consecutive_copurchase_pairs(
@@ -514,7 +506,7 @@ def q144_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     sources = e.select("u").filter(F.col("u") % 499 == 1)
     return bfs_distances(e, sources, max_hops=4, node_col="part").select(

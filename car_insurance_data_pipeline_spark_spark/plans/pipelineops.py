@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 @query(
@@ -313,7 +314,7 @@ def q110_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         e.groupBy("user_id")
         .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     totals = counts.agg(
         F.sum("n").alias("total"), F.count("*").alias("n_keys")

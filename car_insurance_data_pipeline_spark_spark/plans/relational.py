@@ -26,10 +26,6 @@ def dsum(col: Column, scale: int = 6) -> Column:
     return F.sum(col.try_cast(f"decimal(27,{scale})")).cast("double")
 
 
-def _dsum_sql(expr: str, scale: int = 6) -> str:
-    return f"CAST(SUM(TRY_CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE)"
-
-
 def ts_us_expr(ts_dtype: str) -> F.Column:
     """Epoch-microsecond Column for an event-time field of the given
     Spark dtype string, matching DuckDB's ``epoch_us(ts)`` bit for bit.

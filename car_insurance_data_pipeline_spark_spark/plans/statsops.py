@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 _VARIANT = (
     "CASE WHEN substring(md5(CAST(user_id AS VARCHAR)), 1, 1) <= '7'"
@@ -571,7 +572,7 @@ def q223_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("t", "h")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     tot = joint.agg(F.sum("c").cast("bigint").alias("n"))
     mt = joint.groupBy("t").agg(F.sum("c").cast("bigint").alias("cx"))
@@ -757,7 +758,7 @@ def q225_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "d")
         .agg(F.sum("v").cast("bigint").alias("tot"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     a = daily.select(
         "event_type", F.col("d").alias("d1"), F.col("tot").alias("t1")
@@ -860,7 +861,7 @@ def q226_label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums = (
         comp.groupBy("label", "dim")
         .agg(F.sum("q").cast("bigint").alias("s"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     norms = sums.groupBy("label").agg(
         F.sum((F.col("s") * F.col("s")).cast("decimal(38,0)")).alias("nrm")
@@ -985,7 +986,7 @@ def q227_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(embedding,"
             " x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))"
         ).alias("q"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     # v0 = all-ones (micro-units) over the vector width, as a 1-row
     # broadcastable array frame
     vb = vecs.groupBy().agg(
@@ -1024,7 +1025,7 @@ def q227_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "w"
                 )
             )
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
         v = (
@@ -1039,7 +1040,7 @@ def q227_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("v"),
             )
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         vb = v.groupBy().agg(
             F.expr(
@@ -1319,7 +1320,7 @@ def q230_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", "d")
         .agg(F.sum("v").cast("bigint").alias("tot"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     a = daily.select("event_type", F.col("d").alias("d1"), F.col("tot").alias("t1"))
     b = daily.select(
@@ -1423,7 +1424,7 @@ def q231_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # the histogram feeds BOTH the totals and the term sum —
     # checkpoint it so the branch doesn't re-scan the fact
-    g = _value_histogram(spark, sf_dir).localCheckpoint(eager=False)
+    g = _value_histogram(spark, sf_dir).transform(checkpoint)
     t = g.agg(
         F.sum("cnt_a").cast("bigint").alias("n_a"),
         F.sum("cnt_b").cast("bigint").alias("n_b"),
@@ -1862,7 +1863,7 @@ def q235_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_ref").cast("bigint").alias("r"),
             F.sum(1 - F.col("is_ref")).cast("bigint").alias("c"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     t = g.agg(
         F.sum("r").cast("bigint").alias("nr"),
@@ -1962,7 +1963,7 @@ def q236_als_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("u", "i")
         .agg(F.sum("q").cast("bigint").alias("r"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     users = ratings.groupBy("u").agg(
         F.floor(
@@ -2171,13 +2172,13 @@ def q252_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     a range join of the 9-row decile frame against the cumulative
     histogram — both tiny after the collapse).
     """
-    g = _value_histogram(spark, sf_dir).localCheckpoint(eager=False)
+    g = _value_histogram(spark, sf_dir).transform(checkpoint)
     wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     c = g.select(
         "v",
         F.sum("cnt_a").over(wcum).alias("ca"),
         F.sum("cnt_b").over(wcum).alias("cb"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     t = c.agg(
         F.max("ca").cast("bigint").alias("n_a"),
         F.max("cb").cast("bigint").alias("n_b"),
@@ -2481,7 +2482,7 @@ def q280_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         b.groupBy("g", "bin")
         .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     gs = cnt.select("g").distinct()
     bs = cnt.select("bin").distinct()
@@ -2489,7 +2490,7 @@ def q280_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         gs.crossJoin(F.broadcast(bs))
         .join(cnt, ["g", "bin"], "left")
         .select("g", "bin", F.coalesce(F.col("n"), F.lit(0)).alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     wg = Window.partitionBy("g").orderBy("bin").rowsBetween(
         Window.unboundedPreceding, 0
@@ -2602,7 +2603,7 @@ def q282_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("d")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     vd = F.col("v").cast("decimal(38,0)")
     mm = daily.agg(
@@ -2713,7 +2714,7 @@ def q285_conformal_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("month_id")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     wm = Window.orderBy("month_id")
     wall = Window.orderBy("month_id").rowsBetween(
@@ -2725,7 +2726,7 @@ def q285_conformal_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("v", 12).over(wm).alias("l12"),
         F.row_number().over(wm).cast("bigint").alias("rn"),
         F.count("*").over(wall).cast("bigint").alias("n_months"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     resid = lagd.filter(F.col("l12").isNotNull()).select(
         "month_id", F.abs(F.col("v") - F.col("l12")).alias("ar")
     )
@@ -2839,7 +2840,7 @@ def q288_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("bad")).cast("bigint").alias("n_good"),
             F.sum("bad").cast("bigint").alias("n_bad"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     t = g.agg(
         F.sum("n_good").cast("bigint").alias("gg"),
@@ -2951,7 +2952,7 @@ def q289_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("month_id", "moy")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     w = Window.orderBy("month_id")
     wall = Window.orderBy("month_id").rowsBetween(
@@ -2972,7 +2973,7 @@ def q289_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         "moy",
         "v",
         (F.col("vm6") + 2 * F.col("mid11") + F.col("vp6")).alias("trend24"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     se = tr.groupBy("moy").agg(
         F.floor(
             F.sum(24 * F.col("v") - F.col("trend24")).cast("double")
@@ -3055,7 +3056,7 @@ def q290_amoc_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("month_id")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     w = Window.orderBy("month_id")
     wall = Window.orderBy("month_id").rowsBetween(
@@ -3319,7 +3320,7 @@ def q292_simpson_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(yd).cast("decimal(38,0)").alias("sy"),
             F.sum(xd * yd).cast("decimal(38,0)").alias("sxy"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     t = m.agg(
         F.sum("n").cast("decimal(38,0)").alias("tn"),
@@ -3418,7 +3419,7 @@ def q293_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         xy.groupBy("x", "y")
         .agg(F.count("*").cast("bigint").alias("h"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     n = cells.agg(F.sum("h").cast("bigint").alias("n"))
     a = cells.select(
@@ -3553,7 +3554,7 @@ def q294_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n"),
             F.sum("y").cast("bigint").alias("npos"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     wd = Window.orderBy(F.col("v").desc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -3859,7 +3860,7 @@ def q301_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("month_id")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     w = Window.orderBy("month_id")
     wall = w.rowsBetween(
@@ -4366,7 +4367,7 @@ def q305_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("llr_micro"),
         F.count("*").over(wall).cast("bigint").alias("n_days"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     crossing = (
         walk.filter(
             (F.col("llr_micro") >= 2944438)
@@ -4507,7 +4508,7 @@ def q306_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts_us",
             F.round(F.col("value") * 1000).cast("bigint").alias("v"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     lim = ev.agg(
         F.expr("(MIN(ts_us) + MAX(ts_us)) DIV 2").alias("mid")
@@ -4620,7 +4621,7 @@ def q307_expected_calibration_error(
             F.round(F.col("value") * 1000).cast("bigint").alias("v"),
             (F.col("event_type") == "purchase").cast("int").alias("y"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     lim = scored.agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
@@ -5302,7 +5303,7 @@ def q313_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         x.join(c, x["user_id"] == c["c_custkey"])
         .groupBy("g", "v")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     t = h.groupBy("v").agg(F.sum("cnt").cast("bigint").alias("tc"))
     r = t.select(
@@ -5447,7 +5448,7 @@ def q314_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xg = x.join(c, x["user_id"] == c["c_custkey"]).select(
         "g", "v"
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     h = xg.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("cnt"))
     wg = Window.partitionBy("g").orderBy("v").rowsBetween(
         Window.unboundedPreceding, 0
@@ -5723,7 +5724,7 @@ def q323_binary_segmentation(
         )
         .groupBy("month_id")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     w = Window.orderBy("month_id")
     wall = w.rowsBetween(
@@ -5738,7 +5739,7 @@ def q323_binary_segmentation(
         .alias("pre"),
         F.count("*").over(wall).cast("bigint").alias("n"),
         F.sum("v").over(wall).cast("bigint").alias("tot"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     s1 = (
         p.filter(F.col("rn") < F.col("n"))
         .select(
@@ -5900,7 +5901,7 @@ def q324_seasonal_mann_kendall(
         )
         .groupBy("yr", "moy")
         .agg(F.sum("vc").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     a = mo.select(
         F.col("yr").alias("ya"), F.col("moy").alias("ma"),

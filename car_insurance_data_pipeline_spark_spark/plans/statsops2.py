@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 def _signed_ppm_div(num: str, den: str, scale: int = 1_000_000) -> str:
@@ -3689,7 +3690,7 @@ def q368_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         ev.groupBy("d", "h")
         .agg(F.sum("v").cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     dd = "DECIMAL(38,0)"
     tot = cells.agg(
@@ -3704,7 +3705,7 @@ def q368_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             F.expr(f"CAST(CAST(n AS {dd}) * x - s AS {dd})").alias("c"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     den = cent.agg(
         F.max("n").cast("bigint").alias("n"),
@@ -3842,7 +3843,7 @@ def q369_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the (region, brand) grid is referenced by mrow, complete
         # and ranked — checkpoint so the corpus-scale star join runs
         # once, not four times (35 scans -> 7 in the plan audit)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     # lazy rater count (laziness contract: no job at plan-construction
     # time) — a 1-row frame crossJoined where m is needed

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 _GAP = "30 minutes"
 
@@ -248,7 +249,7 @@ def _run_complete(
         # localCheckpoint decouples the result from the memory sink so
         # the temp view can be dropped now; the checkpoint blocks are
         # released by the ContextCleaner when the DataFrame is dropped.
-        out = post(spark.table(sink)).localCheckpoint(eager=True)
+        out = post(spark.table(sink)).transform(checkpoint, eager=True)
         return out, n_batches
     finally:
         if q.isActive:
@@ -1021,7 +1022,7 @@ def q249_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     def post(t: DataFrame) -> DataFrame:
         cur = t.select(
             F.unix_micros(F.col("win.start")).alias("win_us"), "bin", "c"
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint)
         if hi == lo:
             rb = F.lit(0).cast("int")
         else:
@@ -1034,7 +1035,7 @@ def q249_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             base.select(rb.alias("bin"))
             .groupBy("bin")
             .agg(F.count("*").cast("bigint").alias("r"))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         reft = ref.agg(F.sum("r").cast("bigint").alias("nr"))
         curt = cur.groupBy("win_us").agg(
@@ -1228,7 +1229,7 @@ def q286_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     def post(t: DataFrame) -> DataFrame:
         w = t.select(
             F.unix_micros(F.col("win.start")).alias("win_us"), "n", "s"
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint)
         tot = w.agg(
             F.sum("n").cast("bigint").alias("nn"),
             F.sum("s").cast("bigint").alias("ss"),
@@ -1533,7 +1534,7 @@ def q347_stream_wasserstein(
     def post(t: DataFrame) -> DataFrame:
         cur = t.select(
             F.unix_micros(F.col("win.start")).alias("win_us"), "bin", "c"
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint)
         bins = spark.range(10).select(F.col("id").cast("int").alias("bin"))
         wins = cur.select("win_us").distinct()
         grid = (
@@ -1551,7 +1552,7 @@ def q347_stream_wasserstein(
         refg = (
             bins.join(ref, "bin", "left")
             .select("bin", F.coalesce(F.col("r"), F.lit(0)).alias("r"))
-            .localCheckpoint(eager=False)
+            .transform(checkpoint)
         )
         nr = refg.agg(F.sum("r").cast("decimal(38,0)").alias("nr"))
         wo = Window.partitionBy("win_us").orderBy("bin")

@@ -30,6 +30,7 @@ from car_insurance_data_pipeline_spark_spark.functions.text import (
     tokens,
 )
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 @query(
@@ -244,7 +245,7 @@ def q86_unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         tok.groupBy("w")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     tot = cnt.agg(F.sum("c").cast("long").alias("n_total"))
     per_doc = (
@@ -313,7 +314,7 @@ def q87_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (
         d.groupBy("lang")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint, eager=True)
     )
     t = g.agg(
         F.sum("n").cast("long").alias("total"),
@@ -573,8 +574,8 @@ def q89_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.filter(F.trim(F.col("text")) != "").select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w")
     )
-    cnt = (
-        tok.groupBy("w").agg(F.count("*").alias("c")).localCheckpoint(eager=True)
+    cnt = checkpoint(
+        tok.groupBy("w").agg(F.count("*").alias("c")), eager=True
     )
     tot = cnt.agg(F.sum("c").cast("long").alias("n_total"))
     uni = (
@@ -1047,13 +1048,13 @@ def q221_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("a", "b")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     edges = und.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "cnt"
     ).unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "cnt"))
     ow = edges.groupBy("src").agg(F.sum("cnt").cast("bigint").alias("outw"))
-    ew = edges.join(ow, "src").localCheckpoint(eager=False)
+    ew = edges.join(ow, "src").transform(checkpoint)
     # derive the node count from the CHECKPOINTED frame — deriving it
     # from `ow` would recompute the tokenize+aggregate subtree once
     # per broadcast consumer (caught at 8 parquet scans pre-fix)
@@ -1541,8 +1542,8 @@ def q349_dedup_capture_recapture(
     # Each pass feeds BOTH its own count and the overlap join —
     # checkpoint the pair sets so the blocking self-joins run once
     # (lazy lineage re-ran them twice; 12.3 s -> measured drop at 30×).
-    pa = pairs(keyed, "k_bigram").localCheckpoint(eager=False)
-    pb = pairs(keyed, "k_tail").localCheckpoint(eager=False)
+    pa = pairs(keyed, "k_bigram").transform(checkpoint)
+    pb = pairs(keyed, "k_tail").transform(checkpoint)
     na = pa.agg(F.count("*").cast("bigint").alias("na"))
     nb = pb.agg(F.count("*").cast("bigint").alias("nb"))
     nboth = pa.join(pb, ["ida", "idb"]).agg(

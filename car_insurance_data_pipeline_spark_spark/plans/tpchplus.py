@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
 from car_insurance_data_pipeline_spark_spark.plans.relational import events_with_us
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 
 @query(
@@ -1264,7 +1265,7 @@ def q246_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_part = de.groupBy(F.col("ps_partkey").alias("partkey")).agg(
         F.sum("value_cents").cast("bigint").alias("value_cents")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint)
     tot = per_part.agg(F.sum("value_cents").cast("bigint").alias("total"))
     return (
         per_part.crossJoin(F.broadcast(tot))

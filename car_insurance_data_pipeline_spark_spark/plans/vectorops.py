@@ -21,6 +21,7 @@ from car_insurance_data_pipeline_spark_spark.operators.similarity import (
     lsh_cosine_topk,
 )
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
 # Shared DuckDB fragments: double-precision dot product / norm over
 # list<float>, sequential like Spark's aggregate() fold; results are
@@ -727,7 +728,7 @@ def q365_embedding_isotropy(
                 " AS BIGINT))"
             ).alias("qe"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint)
     )
     coords = q.select(
         F.posexplode("qe").alias("i", "c")

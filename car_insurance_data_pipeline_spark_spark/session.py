@@ -14,13 +14,19 @@ Engine code NEVER depends on session-level conf for correctness: all
 queries use try_cast/try_to_timestamp-style expressions so they behave
 identically under ANSI mode (Spark 4 default) and legacy mode, and under
 any session timezone when the host is UTC.
+
+Every lineage cut in the engine goes through ``checkpoint`` below, and
+every early release of a checkpoint's storage through ``release`` /
+``release_all``, so the durability policy lives in this one module.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_session(
@@ -65,3 +71,78 @@ def get_session(
 def stop_session(spark: SparkSession) -> None:
     """Teardown (reference: scripts/11_cleanup_spark_session.py:25-41)."""
     spark.stop()
+
+
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage — the engine's one materialization primitive.
+
+    Iterative loops must cut lineage or the plan doubles per round, and
+    a frame read by several consumers must be materialized once or its
+    upstream re-runs per consumer. Durability follows the cluster
+    configuration, resolved at call time: with a checkpoint dir set
+    (``sparkContext.setCheckpointDir``, HDFS / object store on a real
+    cluster) the frame is written there, so a lost executor recomputes
+    from durable files instead of killing the job; otherwise it is kept
+    as executor-local blocks (``localCheckpoint``) — fast, but lost with
+    the executor. Chained call sites spell it ``.transform(checkpoint)``.
+
+    Either way the frame is computed once: every read, including the
+    first action, sees the same rows. A lazy reliable checkpoint writes
+    its files in a second job after the first action, which would
+    recompute the frame (and could show a non-deterministic plan two
+    different versions), so its RDD is persisted first and the writer
+    reads the blocks the first action stored; ``release`` frees them.
+    """
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    out = df.checkpoint(eager=eager)
+    if not eager:
+        # the analyzed plan is a LogicalRDD over the checkpointed RDD
+        out._jdf.queryExecution().analyzed().rdd().persist(
+            sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK)
+        )
+    return out
+
+
+def release(df: DataFrame) -> None:
+    """Deterministically free a SUPERSEDED checkpoint's storage.
+
+    localCheckpoint blocks are otherwise released only when the
+    py4j-held JVM object is GC'd (ContextCleaner) — unpredictable,
+    and an O(log n)-round loop would pin that many edge-set copies
+    in executor storage. Reliable (`df.checkpoint()`) frames are
+    worse: Spark deletes their FILES only under
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (off
+    by default), so a long loop would leak one full frame copy per
+    iteration on durable storage — we read the RDD's
+    getCheckpointFile() and delete that directory eagerly. Callers
+    only pass frames no longer reachable from any live plan (the
+    successor checkpoint is already materialized), so deletion is
+    safe. The analyzed plan of a checkpointed DataFrame is a
+    LogicalRDD whose rdd() IS the persisted RDD. Best-effort:
+    guarded because the internal accessor path is not public API
+    (a miss only delays release to the ContextCleaner / the
+    cleanCheckpoints conf).
+    """
+    try:
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.unpersist(False)
+        cf = rdd.getCheckpointFile()
+        if cf is not None and cf.isDefined():
+            sc = df.sparkSession.sparkContext
+            path = sc._jvm.org.apache.hadoop.fs.Path(cf.get())
+            fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+            fs.delete(path, True)
+    except Exception:
+        pass
+
+
+def release_all(spark: SparkSession) -> None:
+    """Unpersist every persisted RDD (checkpoint blocks included) and
+    the SQL cache, so the next independent query starts from the same
+    storage state instead of its predecessors' leftovers."""
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(False)
+    spark.catalog.clearCache()
+    gc.collect()

@@ -225,22 +225,6 @@ def read_jdbc(
     return reader.load()
 
 
-def with_enforced_schema(df: DataFrame, schema: StructType) -> DataFrame:
-    """Project ``df`` onto ``schema`` with try_cast per column.
-
-    Mirrors the reference's "infer first, then explicitly cast"
-    policy (scripts/02_clean_contracts_data.py:39-40) as a reusable
-    operator: unparseable cells become NULL (ANSI-safe), extra columns
-    are dropped, missing columns fail fast with an explicit error.
-    """
-    missing = [f.name for f in schema.fields if f.name not in df.columns]
-    if missing:
-        raise ValueError(f"input is missing required columns: {missing}")
-    return df.select(
-        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
 def read_pruned(
     spark: SparkSession,
     manifest: DataFrame,

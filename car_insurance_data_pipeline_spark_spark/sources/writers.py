@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from car_insurance_data_pipeline_spark_spark.session import checkpoint
+
 
 def export_manifest(
     spark, path: str, key_cols: list[str] | None = None
@@ -200,7 +202,7 @@ def compact_parquet(
     n_rows = df.count()
     n_files = max(1, math.ceil(n_rows / target_rows_per_file))
     df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
-    man = export_manifest(spark, dst_path).localCheckpoint(eager=True)
+    man = export_manifest(spark, dst_path).transform(checkpoint, eager=True)
     out_rows = man.agg(F.coalesce(F.sum("n_rows"), F.lit(0))).collect()[0][0]
     if out_rows != n_rows:  # explicit check — assert vanishes under -O
         raise RuntimeError(

@@ -4,6 +4,7 @@ adversarial shapes (long chains stress the O(log n) contraction)."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -496,14 +497,12 @@ def test_kcore_matches_pure_python_peel(spark):
         assert got == expect, f"driver_threshold={thr}"
 
 
-def test_checkpoint_modes_reliable_equals_local(spark, tmp_path):
-    """Round-6 durability parameter (r5 verdict #4): with a
-    checkpoint dir set, checkpoint='reliable' (and 'auto', which must
-    pick reliable when a dir is configured) routes round state
-    through reliable checkpoints and returns the same results as the
-    local mode on every iterative op."""
+def test_checkpoint_modes_reliable_equals_local(spark, request):
+    """Durability follows configuration: with no checkpoint dir the
+    iterative ops cut lineage with executor-local blocks, and with one
+    set every cut goes through reliable checkpoint files. Both must
+    return the same results on every iterative op."""
     from car_insurance_data_pipeline_spark_spark.operators.graph import (
-        _make_ckpt,
         bfs_distances,
         connected_components,
         kcore,
@@ -516,82 +515,54 @@ def test_checkpoint_modes_reliable_equals_local(spark, tmp_path):
     df = spark.createDataFrame(pairs, "src long, dst long")
     src = spark.createDataFrame([(0,)], "node long")
 
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    with pytest.raises(ValueError):
-        _make_ckpt(spark, "reliable")
-    with pytest.raises(ValueError):
-        _make_ckpt(spark, "bogus")
-
-    def run_all(**kw):
+    def run_all():
         return (
             {(r.node, r.dist) for r in bfs_distances(
-                e, src, max_hops=4, driver_threshold=0, **kw).collect()},
+                e, src, max_hops=4, driver_threshold=0).collect()},
             {(r.u, r.core_degree) for r in kcore(
-                e, k=2, rounds=6, driver_threshold=0, **kw).collect()},
+                e, k=2, rounds=6, driver_threshold=0).collect()},
             {(r.node, r.component) for r in connected_components(
-                df, driver_threshold=0, **kw).collect()},
+                df, driver_threshold=0).collect()},
             {(r.node, r.label) for r in label_propagation(
-                df, n_iter=3, driver_threshold=0, **kw).collect()},
+                df, n_iter=3, driver_threshold=0).collect()},
             {(r.node, round(r.rank, 9)) for r in pagerank(
-                df, n_iter=5, driver_threshold=0, **kw).collect()},
+                df, n_iter=5, driver_threshold=0).collect()},
         )
 
-    local = run_all(checkpoint="local")
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        reliable = run_all(checkpoint="reliable")
-        auto = run_all(checkpoint="auto")
-    finally:
-        # clear so later tests see the no-dir default again
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(None)
-        )
+    local = run_all()
+    ckdir = request.getfixturevalue("reliable_checkpoint_dir")
+    reliable = run_all()
     assert reliable == local
-    assert auto == local
-    import os
-    assert os.listdir(str(tmp_path / "ckpt"))  # reliable files were written
+    assert os.listdir(ckdir)  # reliable files were written
 
 
 def test_reliable_checkpoint_files_deleted_for_superseded_frames(
-    spark, tmp_path
+    spark, reliable_checkpoint_dir
 ):
     """r6 advisor fix: in reliable mode Spark only deletes checkpoint
     FILES under spark.cleaner.referenceTracking.cleanCheckpoints
     (off by default), so a long Pregel loop would leak one full frame
-    copy per iteration on durable storage. _release_checkpoint now
-    deletes superseded frames' directories eagerly — after a 6-round
+    copy per iteration on durable storage. session.release deletes
+    superseded frames' directories eagerly — after a 6-round
     pagerank, only the LIVE final frame's rdd-* directory (plus at
     most one still-referenced static frame) may remain."""
-    import os
-
     from car_insurance_data_pipeline_spark_spark.operators.graph import (
         pagerank,
     )
 
     pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 0), (5, 6)]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    sc = spark.sparkContext
-    ckdir = str(tmp_path / "ck_release")
-    sc.setCheckpointDir(ckdir)
-    try:
-        ranks = pagerank(
-            df, n_iter=6, driver_threshold=0, checkpoint="reliable"
-        )
-        assert ranks.count() == 7
-        rdd_dirs = [
-            d
-            for _, dirs, _ in os.walk(ckdir)
-            for d in dirs
-            if d.startswith("rdd-")
-        ]
-        # without eager deletion this is >= 4 (nodes, edges+degrees,
-        # and every per-iteration rank frame)
-        assert len(rdd_dirs) <= 2, rdd_dirs
-    finally:
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(None)
-        )
+    ranks = pagerank(df, n_iter=6, driver_threshold=0)
+    assert ranks.count() == 7
+    rdd_dirs = [
+        d
+        for _, dirs, _ in os.walk(reliable_checkpoint_dir)
+        for d in dirs
+        if d.startswith("rdd-")
+    ]
+    # without eager deletion this is >= 4 (nodes, edges+degrees,
+    # and every per-iteration rank frame)
+    assert len(rdd_dirs) <= 2, rdd_dirs
 
 
 def test_adamic_adar_matches_brute(spark):

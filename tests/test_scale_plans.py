@@ -536,19 +536,21 @@ def test_triangle_wedges_never_shuffle(spark, sf_dir):
     assert "array_intersect" in plan
 
 
-def test_triangle_edge_build_pre_checkpoint_plan(spark, sf_dir):
-    """q135's edge construction sits BEHIND an eager localCheckpoint,
-    so the assertions above can't see its stages (checkpoints
-    truncate lineage). Build the oriented edge list WITHOUT the
-    checkpoint and plan-assert it directly: the per-order pair
-    generation is an explode (no lineitem self-join), and the two
-    degree joins are equi-joins — a dropped join condition
-    degenerating to a cross product fails here, not silently."""
-    from car_insurance_data_pipeline_spark_spark.plans.linkops import (
-        copurchase_oriented_edges,
-    )
+def test_triangle_edge_build_pre_checkpoint_plan(
+    spark, sf_dir, monkeypatch
+):
+    """q135's edge construction sits BEHIND a checkpoint, so the
+    assertions above can't see its stages (checkpoints truncate
+    lineage). Build the oriented edge list with linkops' checkpoint
+    replaced by the identity and plan-assert it directly: the
+    per-order pair generation is an explode (no lineitem self-join),
+    and the two degree joins are equi-joins — a dropped join
+    condition degenerating to a cross product fails here, not
+    silently."""
+    from car_insurance_data_pipeline_spark_spark.plans import linkops
 
-    plan = _plan(copurchase_oriented_edges(spark, sf_dir, checkpoint=False))
+    monkeypatch.setattr(linkops, "checkpoint", lambda df: df)
+    plan = _plan(linkops.copurchase_oriented_edges(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Generate explode" in plan  # pair fan-out, not a self-join

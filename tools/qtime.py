@@ -20,7 +20,6 @@ Prints one JSON line per query and a final summary line.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import statistics
@@ -46,7 +45,10 @@ def main() -> None:
     from car_insurance_data_pipeline_spark_spark.plans.catalog import (
         all_queries,
     )
-    from car_insurance_data_pipeline_spark_spark.session import get_session
+    from car_insurance_data_pipeline_spark_spark.session import (
+        get_session,
+        release_all,
+    )
 
     spark = get_session(app_name="qtime")
     qs = all_queries()
@@ -54,13 +56,6 @@ def main() -> None:
     # JIT/classloading or Python-worker fork startup
     qs["q02_market_segment_revenue"](spark, "/root/testdata/sf0.001").count()
     qs["q41_embedding_dup_pairs"](spark, "/root/testdata/sf0.001").count()
-
-    def release_blocks() -> None:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in m.values():
-            jrdd.unpersist(False)
-        spark.catalog.clearCache()
-        gc.collect()
 
     results = {}
     for name in args.queries:
@@ -70,14 +65,14 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[name](spark, args.sf).count()
             samples.append(time.perf_counter() - t0)
-            release_blocks()
+            release_all(spark)
             if args.noop:
                 t0 = time.perf_counter()
                 qs[name](spark, args.sf).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 noop_samples.append(time.perf_counter() - t0)
-                release_blocks()
+                release_all(spark)
             spark.sparkContext.setJobDescription(None)
         row = {
             "query": name,
@@ -100,7 +95,7 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(txt)
             row["explain"] = path
-            release_blocks()
+            release_all(spark)
         print(json.dumps(row), flush=True)
         results[name] = row["min"]
     print(json.dumps({"metric": "qtime_total_min_sec",
