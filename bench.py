@@ -505,6 +505,15 @@ def compute_movers(
     }
 
 
+def warm_up(spark, qs) -> None:
+    """Warm the JVM/session on the smallest fixture so first-query cost
+    reflects the plan, not JIT/classloading — and warm the Python
+    worker pool (an Arrow query) so the first applyInPandas query
+    isn't charged the one-time ~3 s worker/fork startup either."""
+    qs["q02_market_segment_revenue"](spark, "/root/testdata/sf0.001").count()
+    qs["q41_embedding_dup_pairs"](spark, "/root/testdata/sf0.001").count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
@@ -517,13 +526,7 @@ def main() -> None:
 
     spark = get_session(app_name="bench")
     qs = all_queries()
-
-    # Warm the JVM/session on the smallest fixture so first-query cost
-    # reflects the plan, not JIT/classloading — and warm the Python
-    # worker pool (an Arrow query) so the first applyInPandas query
-    # isn't charged the one-time ~3 s worker/fork startup either.
-    qs["q02_market_segment_revenue"](spark, "/root/testdata/sf0.001").count()
-    qs["q41_embedding_dup_pairs"](spark, "/root/testdata/sf0.001").count()
+    warm_up(spark, qs)
 
     # Default reps: 3 up to ~210 queries (the historical suite size),
     # 2 for the round-9 widened 262-query suite — a full 3-rep pass

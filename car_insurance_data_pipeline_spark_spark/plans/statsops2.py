@@ -3670,7 +3670,7 @@ def q368_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor self-joins run on a domain-bounded frame and AQE
     broadcasts them; the only corpus-sized work is the first
     groupBy's exchange, map-side combined. The 1-row total is a
-    measured bounded anchor under tools/bnl_audit.py.
+    measured bounded anchor under tools/scale_audit.py.
     """
     ev = (
         table(spark, sf_dir, "events")

@@ -12,10 +12,14 @@ coverage cross-check flags any BNL node the API intercept did not
 see (UNATTRIBUTED), so a join shape outside the detector can't
 silently skip measurement.
 
-Scope: the 50-slot driver window (rotates; coverage accumulates)
-plus the densest-BNL queries pinned explicitly. The exhaustive
-whole-catalog sweep is tools/bnl_audit.py → BNL_AUDIT.md, regenerated
-each round.
+The measuring is done by tools/scale_audit.py. Scope: the 50-slot
+driver window plus the densest-BNL queries pinned explicitly, swept
+once by the ``window_sweep`` fixture in tests/conftest.py
+(tests/test_broadcast_guard.py reads the same sweep). This file also
+holds the BNL-specific self-tests and negative controls, the
+whitelist logic, and the checks of the live whitelists against the
+committed artifacts. The exhaustive whole-catalog sweep is
+tools/scale_audit.py → BNL_AUDIT.md, regenerated each round.
 """
 
 from __future__ import annotations
@@ -28,51 +32,30 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _load_audit_tool():
     spec = importlib.util.spec_from_file_location(
-        "bnl_audit", os.path.join(_REPO, "tools", "bnl_audit.py")
+        "scale_audit", os.path.join(_REPO, "tools", "scale_audit.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-# The catalog's densest BNL users (PLAN_AUDIT_FULL round-9: q281
-# fk-inference shows 24 BNL nodes, q293/q223 six each) plus q38,
-# the one live ``!=``-condition BNL — pinned regardless of window
-# rotation so the heaviest shapes never rotate out of CI.
-_DENSE_BNL = [
-    "q281_fk_inference",
-    "q293_kendall_tau",
-    "q223_mutual_information",
-    "q38_cosine_topk",
-    # the two shapes the first full sweep could NOT attribute (now
-    # covered: NOT-group stripping / the hinted-constant-key
-    # whitelist) — pinned so neither coverage fix can regress
-    "q339_hoeffding_d",
-    "q305_sprt_monitor",
-]
-
-
-def test_driver_window_has_no_corpus_scaling_bnl_builds(spark):
-    from car_insurance_data_pipeline_spark_spark.plans.catalog import specs
-
-    ba = _load_audit_tool()
-    names = list(specs())[:50]
-    names += [n for n in _DENSE_BNL if n not in names]
-    sites, errors = ba.run_sweep(spark, names)
-    assert not errors, f"window queries failed to build in the sweep: {errors}"
+def test_driver_window_has_no_corpus_scaling_bnl_builds(window_sweep):
+    sa = _load_audit_tool()
+    assert not window_sweep.errors, (
+        f"window queries failed to build in the sweep: {window_sweep.errors}"
+    )
     # The intercept must actually observe builds — the round-10
     # window's own anchors (q368's 1-row total, q369's rater-count
     # grid chain) plus the pinned dense-BNL set (q281 records three
     # sites alone) guarantee well over four; an empty-ish capture
     # means the intercept broke, not that the repo is clean.
+    sites = window_sweep.bnl
     assert len(sites) >= 4, f"bnl intercept captured too little: {sites}"
-    bad = ba.violations_of(sites)
-    detail = {
-        k: sites[k].get("rows", "unattributed") for k in bad if k in sites
-    }
+    bad = sa.violations_of(sites, "bnl", window_sweep.broadcast)
+    detail = {k: sites[k]["rows"] or "unattributed" for k in bad}
     assert not bad, (
         "nested-loop build sides that track the 10x fixture growth "
-        f"(100 TB OOM hazard) or unattributed BNL nodes: {detail or bad}"
+        f"(100 TB OOM hazard) or unattributed BNL nodes: {detail}"
     )
 
 
@@ -90,11 +73,12 @@ def test_guard_catches_a_corpus_sized_cross_build(spark):
         docs = table(spark, sf_dir, "documents").select("doc_id")
         return docs.crossJoin(docs.selectExpr("doc_id AS other_id"))
 
-    sites, errors = ba.run_sweep(
+    sweep = ba.run_sweep(
         spark, names=["bad"], queries={"bad": bad_query}
     )
-    assert not errors
-    assert ba.violations_of(sites), (
+    assert not sweep.errors
+    sites = sweep.bnl
+    assert ba.violations_of(sites, "bnl"), (
         f"guard failed to flag a corpus x corpus cross build: {sites}"
     )
 
@@ -117,11 +101,12 @@ def test_guard_catches_a_growing_non_equi_build(spark):
             other, F.col("doc_id") != F.col("other_id"), "left"
         )
 
-    sites, errors = ba.run_sweep(
+    sweep = ba.run_sweep(
         spark, names=["bad"], queries={"bad": bad_query}
     )
-    assert not errors
-    assert ba.violations_of(sites), (
+    assert not sweep.errors
+    sites = sweep.bnl
+    assert ba.violations_of(sites, "bnl"), (
         f"guard failed to flag a corpus-sized != build side: {sites}"
     )
 
@@ -141,12 +126,13 @@ def test_guard_passes_a_bounded_anchor(spark):
         total = docs.agg(F.count("*").alias("n_total"))
         return docs.crossJoin(total).select("doc_id", "n_total")
 
-    sites, errors = ba.run_sweep(
+    sweep = ba.run_sweep(
         spark, names=["good"], queries={"good": good_query}
     )
-    assert not errors
+    assert not sweep.errors
+    sites = sweep.bnl
     assert len(sites) == 1
-    assert ba.violations_of(sites) == []
+    assert ba.violations_of(sites, "bnl") == []
 
 
 def test_not_wrapped_condition_is_measured_not_unattributed(spark):
@@ -170,15 +156,16 @@ def test_not_wrapped_condition_is_measured_not_unattributed(spark):
         )
         return docs.join(other, cond, "left")
 
-    sites, errors = ba.run_sweep(
+    sweep = ba.run_sweep(
         spark, names=["dom"], queries={"dom": dominance_query}
     )
-    assert not errors
+    assert not sweep.errors
+    sites = sweep.bnl
     measured = [
         k for k, e in sites.items() if not e.get("unattributed")
     ]
     assert measured, f"NOT-wrapped non-equi join was not recorded: {sites}"
-    assert ba.violations_of(sites) == []
+    assert ba.violations_of(sites, "bnl") == []
 
 
 def test_unattributed_bnl_is_flagged(spark):
@@ -201,11 +188,12 @@ def test_unattributed_bnl_is_flagged(spark):
         )
         return docs.join(other, cond)
 
-    sites, errors = ba.run_sweep(
+    sweep = ba.run_sweep(
         spark, names=["sneaky"], queries={"sneaky": sneaky_query}
     )
-    assert not errors
-    bad = ba.violations_of(sites)
+    assert not sweep.errors
+    sites = sweep.bnl
+    bad = ba.violations_of(sites, "bnl")
     assert any("unattributed" in k for k in bad), (
         f"OR-equality BNL was neither measured nor flagged: {sites}"
     )
@@ -228,53 +216,99 @@ def test_right_outer_build_side_is_left(spark):
             tiny, F.col("doc_id") != F.col("other_id"), "right"
         )
 
-    sites, errors = ba.run_sweep(
+    sweep = ba.run_sweep(
         spark, names=["bad"], queries={"bad": bad_query}
     )
-    assert not errors
-    assert ba.violations_of(sites), (
+    assert not sweep.errors
+    sites = sweep.bnl
+    assert ba.violations_of(sites, "bnl"), (
         f"right-outer corpus LEFT build was not flagged: {sites}"
     )
 
 
 def test_stale_constant_key_whitelist_reflag():
     """The hinted-constant-key waiver must be VERIFIED, not prose:
-    classify() checks the cited (site, query) row in the committed
-    BROADCAST_AUDIT.md and re-flags the violation when the citation
-    is stale (site gone / rows above the declared cap) — the
-    CAPPED_SITES failure-mode philosophy. No Spark needed: this is
-    pure classify logic over a synthetic unattributed entry."""
+    classify() resolves the cited (file, query) against the broadcast
+    sites the same sweep measured and re-flags the violation when the
+    citation is stale (no measured site there / rows above the
+    declared cap) — the CAPPED_SITES failure-mode philosophy. No
+    Spark needed: pure classify logic over a synthetic unattributed
+    entry and synthetic broadcast sites."""
     ba = _load_audit_tool()
+    query = "q305_sprt_monitor"
+    cited = "car_insurance_data_pipeline_spark_spark/plans/statsops.py"
     ent = {
-        "<unattributed:1-node>|q305_sprt_monitor": {
+        f"<unattributed:1-node>|{query}": {
             "site": "<unattributed:1-node>",
-            "query": "q305_sprt_monitor",
+            "query": query,
             "rows": {},
             "unattributed": True,
         }
     }
-    # the real citation verifies against the committed artifact
-    assert ba.violations_of(ent) == []
-    # a stale citation (site that is not in BROADCAST_AUDIT.md for
-    # this query) must re-flag
+
+    def hints(*sites):
+        return {
+            f"{site}|{q}": {"site": site, "query": q, "rows": rows}
+            for site, q, rows in sites
+        }
+
+    one_row = (f"{cited}:10", query, {"sf0.01": 1, "sf0.1": 1})
+    # the live citation resolves against a 1-row measured hint
+    assert ba.violations_of(ent, "bnl", hints(one_row)) == []
+    # stale: nothing measured in the cited file for this query (the
+    # hint moved to another file, or only another query uses it)
+    assert ba.violations_of(ent, "bnl", {}), "empty sweep was not re-flagged"
+    assert ba.violations_of(
+        ent,
+        "bnl",
+        hints(
+            ("car_insurance_data_pipeline_spark_spark/plans/other.py:3",
+             query, {"sf0.01": 1, "sf0.1": 1}),
+            (f"{cited}:10", "q01_other", {"sf0.01": 1, "sf0.1": 1}),
+        ),
+    ), "stale citation was not re-flagged"
+    # over cap: a second site in the cited file measures more rows
+    # than the declared max — the max over matching sites decides
+    assert ba.violations_of(
+        ent,
+        "bnl",
+        hints(one_row, (f"{cited}:99", query, {"sf0.01": 2, "sf0.1": 20})),
+    ), "over-cap citation was not re-flagged"
     orig = ba.HINTED_CONSTANT_KEY_BNL
     try:
-        ba.HINTED_CONSTANT_KEY_BNL = {
-            "q305_sprt_monitor": ("plans/nowhere.py:1", 1)
-        }
-        assert ba.violations_of(ent), "stale citation was not re-flagged"
-        # ... and a cap below the measured rows must also re-flag
-        # (file-level citation that DOES resolve, cap deliberately 0)
-        ba.HINTED_CONSTANT_KEY_BNL = {
-            "q305_sprt_monitor": (
-                "car_insurance_data_pipeline_spark_spark/plans/"
-                "statsops.py",
-                0,
-            )
-        }
-        assert ba.violations_of(ent), "over-cap citation was not re-flagged"
+        ba.HINTED_CONSTANT_KEY_BNL = {query: (cited, 0)}
+        assert ba.violations_of(ent, "bnl", hints(one_row)), (
+            "a cap below the measured rows was not re-flagged"
+        )
     finally:
         ba.HINTED_CONSTANT_KEY_BNL = orig
+
+
+def _committed_rows(artifact: str) -> list[tuple[str, str, int, int]]:
+    """(site, query, rows@sf0.01, rows@sf0.1) per table row of a
+    committed audit artifact (BROADCAST_AUDIT.md / BNL_AUDIT.md)."""
+    rows = []
+    with open(os.path.join(_REPO, artifact)) as f:
+        for line in f:
+            parts = [p.strip() for p in line.strip().strip("|").split("|")]
+            if len(parts) < 4:
+                continue
+            try:
+                rows.append((parts[0], parts[1], int(parts[2]), int(parts[3])))
+            except ValueError:
+                continue  # header / separator / prose
+    return rows
+
+
+def _file_rows(rows, path: str, query: str) -> list[int]:
+    """Measured rows (both SFs) of every row for ``query`` whose call
+    site lies in ``path``."""
+    return [
+        n
+        for site, q, small, big in rows
+        if q == query and site.rsplit(":", 1)[0] == path
+        for n in (small, big)
+    ]
 
 
 def test_live_constant_key_whitelist_resolves():
@@ -291,65 +325,47 @@ def test_live_constant_key_whitelist_resolves():
     sweep."""
     ba = _load_audit_tool()
     assert ba.HINTED_CONSTANT_KEY_BNL, "whitelist unexpectedly empty"
+    rows = _committed_rows("BROADCAST_AUDIT.md")
     for query, (cited, max_rows) in ba.HINTED_CONSTANT_KEY_BNL.items():
         assert ":" not in os.path.basename(cited), (
             f"{query}: waiver citation {cited!r} is line-keyed — it "
             "will go stale on any edit above the site; cite the file"
         )
-        measured = ba._broadcast_audit_rows(cited, query)
-        assert measured is not None, (
+        measured = _file_rows(rows, cited, query)
+        assert measured, (
             f"{query}: waiver cites {cited!r} but BROADCAST_AUDIT.md "
             "has no row for that (file, query) — regenerate the "
-            "audits (tools/refresh_audits.py) or fix the citation"
+            "audits (tools/scale_audit.py) or fix the citation"
         )
-        assert measured <= max_rows, (
-            f"{query}: BROADCAST_AUDIT.md measures {measured} rows at "
-            f"{cited}, above the declared cap {max_rows}"
+        assert max(measured) <= max_rows, (
+            f"{query}: BROADCAST_AUDIT.md measures {max(measured)} rows "
+            f"at {cited}, above the declared cap {max_rows}"
         )
 
 
 def test_live_capped_sites_resolve_against_committed_audit():
-    """Same staleness class for broadcast_audit.CAPPED_SITES: every
-    line-stable 'file|query' cap must match a committed
-    BROADCAST_AUDIT.md row (and the measured rows must be within the
-    cap), and no entry may use the drift-prone 'file:line' form."""
-    spec = importlib.util.spec_from_file_location(
-        "broadcast_audit", os.path.join(_REPO, "tools", "broadcast_audit.py")
+    """Same staleness class for CAPPED_SITES: every line-stable
+    'file|query' cap must match a row of a committed audit (and the
+    measured rows must be within the cap), and no entry may use the
+    drift-prone 'file:line' form."""
+    ba = _load_audit_tool()
+    rows = _committed_rows("BROADCAST_AUDIT.md") + _committed_rows(
+        "BNL_AUDIT.md"
     )
-    bca = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bca)
-    audit_path = os.path.join(_REPO, "BROADCAST_AUDIT.md")
-    with open(audit_path) as f:
-        rows = [
-            [p.strip() for p in line.strip().strip("|").split("|")]
-            for line in f
-        ]
-    for key, cap in bca.CAPPED_SITES.items():
+    for key, cap in ba.CAPPED_SITES.items():
         assert "|" in key, (
             f"CAPPED_SITES key {key!r} is line-keyed (file:line) — "
             "re-key as 'file|query' so edits above the site can't "
             "stale it"
         )
-        path_part, query = key.split("|", 1)
-        matches = [
-            r
-            for r in rows
-            if len(r) >= 4
-            and r[1] == query
-            and r[0].rsplit(":", 1)[0] == path_part
-        ]
-        assert matches, (
+        measured = _file_rows(rows, *key.split("|", 1))
+        assert measured, (
             f"CAPPED_SITES entry {key!r} matches no committed "
-            "BROADCAST_AUDIT.md row — stale cap"
+            "audit row — stale cap"
         )
-        for r in matches:
-            try:
-                measured = max(int(r[2]), int(r[3]))
-            except ValueError:
-                continue
-            assert measured <= cap, (
-                f"{key}: audit measures {measured} rows, above cap {cap}"
-            )
+        assert max(measured) <= cap, (
+            f"{key}: audit measures {max(measured)} rows, above cap {cap}"
+        )
 
 
 def test_coverage_adjudication_staleness_and_escalation():

@@ -5,20 +5,22 @@ the class hit twice in round 8 (q355's part hint, removed; q317's
 doc_id→lang map, removed in round 9).
 
 The guard is DYNAMIC, in the spirit of
-test_dedup_candidates_have_no_posting_arrays: it intercepts every
-``F.broadcast(...)`` call while building the driver-window queries
-at sf0.01 AND sf0.1 (most fixture tables grow 10× between the two;
+test_dedup_candidates_have_no_posting_arrays: tools/scale_audit.py
+intercepts every ``F.broadcast(...)`` call while building queries at
+sf0.01 AND sf0.1 (most fixture tables grow 10× between the two;
 embeddings grows 4× — which sets the tool's growth limit), counts
 each hinted frame at both scales, and fails any site whose row
 count tracks the corpus growth. Dimension frames
 stay flat; model/vocabulary frames grow sublinearly (Heaps law);
 only a corpus-scaling frame rides the full 10×.
 
-Scope: the 50-slot driver window (the set the grading driver runs
-this round; the window rotates, so coverage accumulates round over
-round) plus the two historical-hazard queries pinned explicitly.
-The exhaustive whole-catalog sweep is tools/broadcast_audit.py →
-BROADCAST_AUDIT.md, regenerated each round.
+Scope: the 50-slot driver window plus the historical-hazard queries
+pinned explicitly, swept once by the ``window_sweep`` fixture in
+tests/conftest.py (tests/test_bnl_guard.py reads the same sweep).
+This file also holds the broadcast-specific self-test and the
+spelling gate the intercept relies on. The exhaustive whole-catalog
+sweep is tools/scale_audit.py → BROADCAST_AUDIT.md, regenerated each
+round.
 """
 
 from __future__ import annotations
@@ -26,46 +28,34 @@ from __future__ import annotations
 import importlib.util
 import os
 
-import pytest
-
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_audit_tool():
     spec = importlib.util.spec_from_file_location(
-        "broadcast_audit", os.path.join(_REPO, "tools", "broadcast_audit.py")
+        "scale_audit", os.path.join(_REPO, "tools", "scale_audit.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-# Queries where a corpus-scaling broadcast has actually shipped (and
-# been removed) — pinned forever regardless of window rotation.
-_HAZARD_HISTORY = ["q317_nb_langid", "q355_bradley_terry"]
-
-
-def test_driver_window_has_no_corpus_scaling_broadcasts(spark):
-    from car_insurance_data_pipeline_spark_spark.plans.catalog import specs
-
-    ba = _load_audit_tool()
-    names = list(specs())[:50]
-    names += [n for n in _HAZARD_HISTORY if n not in names]
-    sites, errors = ba.run_sweep(spark, names)
+def test_driver_window_has_no_corpus_scaling_broadcasts(window_sweep):
+    sa = _load_audit_tool()
     # Every window query must BUILD at both SFs — a query that errors
     # out of the sweep contributes zero sites and would otherwise be
-    # silently unaudited (all 349 catalog queries build cleanly in
-    # the full tools/broadcast_audit.py sweep, so any error here is a
-    # regression, not an expected streaming/eager case).
-    assert not errors, f"window queries failed to build in the sweep: {errors}"
+    # silently unaudited (every catalog query builds cleanly in the
+    # full sweep, so any error here is a regression).
+    assert not window_sweep.errors, (
+        f"window queries failed to build in the sweep: {window_sweep.errors}"
+    )
     # The sweep must actually observe hinted frames (q317 alone has
     # five sites); an empty capture means the intercept broke, not
     # that the repo is clean.
+    sites = window_sweep.broadcast
     assert len(sites) >= 5, f"broadcast intercept captured too little: {sites}"
-    bad = ba.violations_of(sites)
-    detail = {
-        s: r["rows"] for s, r in sites.items() if s in set(bad)
-    }
+    bad = sa.violations_of(sites, "broadcast")
+    detail = {k: sites[k]["rows"] for k in bad}
     assert not bad, (
         "corpus-scaling F.broadcast() inputs (rows track the 10x "
         f"fixture growth — 100 TB OOM hazard): {detail}"
@@ -81,18 +71,16 @@ def test_guard_catches_a_forced_corpus_broadcast(spark):
 
     from car_insurance_data_pipeline_spark_spark.plans.catalog import table
 
-    ba = _load_audit_tool()
+    sa = _load_audit_tool()
 
     def bad_query(spark, sf_dir):
         docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
         return docs.join(F.broadcast(docs.select("doc_id")), "doc_id")
 
-    sites, errors = ba.run_sweep(
-        spark, names=["bad"], queries={"bad": bad_query}
-    )
-    assert not errors
-    assert ba.violations_of(sites), (
-        f"guard failed to flag a per-document broadcast: {sites}"
+    sweep = sa.run_sweep(spark, names=["bad"], queries={"bad": bad_query})
+    assert not sweep.errors
+    assert sa.violations_of(sweep.broadcast, "broadcast"), (
+        f"guard failed to flag a per-document broadcast: {sweep.broadcast}"
     )
 
 

@@ -158,7 +158,7 @@ def main() -> None:
            "`cartesian`/`bnl` only as bounded broadcast anchors —",
            "since round 10 this is MEASURED, not asserted: every",
            "nested-loop build side is row-counted at two SFs by",
-           "tools/bnl_audit.py (BNL_AUDIT.md, guarded by",
+           "tools/scale_audit.py (BNL_AUDIT.md, guarded by",
            "tests/test_bnl_guard.py). `global_sort` on the statistics queries is",
            "the HISTOGRAM-SUBSTRATE window sort: it orders the",
            "aggregated distinct-value histogram (value-domain-bound,",

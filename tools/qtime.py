@@ -42,6 +42,7 @@ def main() -> None:
     ap.add_argument("--noop", action="store_true")
     args = ap.parse_args()
 
+    from bench import warm_up
     from car_insurance_data_pipeline_spark_spark.plans.catalog import (
         all_queries,
     )
@@ -52,10 +53,7 @@ def main() -> None:
 
     spark = get_session(app_name="qtime")
     qs = all_queries()
-    # same warmup as bench.py so the first query isn't charged
-    # JIT/classloading or Python-worker fork startup
-    qs["q02_market_segment_revenue"](spark, "/root/testdata/sf0.001").count()
-    qs["q41_embedding_dup_pairs"](spark, "/root/testdata/sf0.001").count()
+    warm_up(spark, qs)
 
     results = {}
     for name in args.queries:
