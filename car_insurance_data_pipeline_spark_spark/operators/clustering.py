@@ -37,6 +37,12 @@ from pyspark.sql import functions as F
 
 from car_insurance_data_pipeline_spark_spark.session import checkpoint
 
+# kmeans_fit_predict's driver-route ceiling: an ABSOLUTE vector count
+# (never derived from host parallelism), measured in its docstring.
+# Read at call time: a test forces the distributed loop by patching
+# it to 0.
+KMEANS_DRIVER_MAX_ROWS = 150_000
+
 
 def _assign(
     v: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
@@ -214,7 +220,6 @@ def kmeans_fit_predict(
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 5,
-    driver_threshold: int = 150_000,
 ) -> DataFrame:
     """Lloyd k-means → (id_col, cluster int). Deterministic by
     construction (see module docstring); empty clusters keep their
@@ -223,14 +228,11 @@ def kmeans_fit_predict(
     contract).
 
     Adaptive small-corpus path (optimization r11 — the graph-family
-    dispatch contract): at or below ``driver_threshold`` vectors the
-    corpus is driver-bounded by contract (150k × dim-64 doubles ≈
-    75 MB Arrow) and the n_iter×3-job distributed loop collapses to
-    one collect + a numpy/exact-decimal driver recurrence with
-    bit-identical semantics (`_kmeans_driver`). The threshold is an
-    ABSOLUTE row count — never derived from host parallelism — so a
-    consumer's route is a pure function of the data. Pass
-    ``driver_threshold=0`` to force the distributed loop.
+    dispatch contract): at or below ``KMEANS_DRIVER_MAX_ROWS``
+    vectors the corpus is driver-bounded by contract (150k × dim-64
+    doubles ≈ 75 MB Arrow) and the n_iter×3-job distributed loop
+    collapses to one collect + a numpy/exact-decimal driver
+    recurrence with bit-identical semantics (`_kmeans_driver`).
 
     Threshold re-measured at the ceiling (optimization r12 — the
     r11 verdict #6 gap: the old 200k ceiling was never measured,
@@ -239,12 +241,12 @@ def kmeans_fit_predict(
     chunked assign, measured driver-vs-distributed walls: 50k
     1.8/5.2 s, 100k 3.5/6.9 s, 150k 6.8/8.0 s, 200k ~14/9 s —
     150k is the last measured point where the driver route wins,
-    so that is the default. Both fixture scales (2k at sf0.1, 20k
+    so that is the ceiling. Both fixture scales (2k at sf0.1, 20k
     at 10×) route driver as before."""
     spark = df.sparkSession
     v = df.select(id_col, vec_col)
 
-    if v.count() <= driver_threshold:
+    if v.count() <= KMEANS_DRIVER_MAX_ROWS:
         return _kmeans_driver(spark, v, id_col, vec_col, k, n_iter)
 
     init_rows = v.orderBy(id_col).limit(k).collect()

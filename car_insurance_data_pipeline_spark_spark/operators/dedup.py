@@ -808,13 +808,13 @@ def _candidate_volume(ranked: DataFrame) -> int:
 # 32 threads; the 10× weak-scaling fixture generates 6,953,631
 # (exactly 10× — the disjoint-replica design) and costs 70.8 s —
 # fully linear, ~100k candidates/s of end-to-end wall. 100k
-# candidates/core puts the single-node auto boundary at ~3.2M
+# candidates/core × 32 puts the single-node auto boundary at 3.2M
 # candidates (between the two measured points, ~32 s of exact work
-# — the same exact-anchor acceptance class as
-# graph.WEDGES_PER_CORE_DEFAULT) and scales the budget with the
-# cluster: 1000 executors × 8 cores routes exact up to 800M
-# candidates before sketching.
-CANDIDATES_PER_CORE_DEFAULT = 100_000
+# — the same exact-anchor acceptance class as graph.WEDGE_BUDGET).
+# The budget is ABSOLUTE — the calibration measured single-node
+# walls only — so an oracle-bearing consumer (q178) routes the same
+# on any host. Read at call time (tests patch it).
+CANDIDATE_BUDGET = 3_200_000
 
 
 def near_dup_pairs(
@@ -824,10 +824,8 @@ def near_dup_pairs(
     k: int = 3,
     threshold: float = 0.5,
     dispatch: str = "auto",
-    candidates_per_core: int = CANDIDATES_PER_CORE_DEFAULT,
     num_hashes: int = 32,
     bands: int = 16,
-    budget_rows: int | None = None,
 ) -> DataFrame:
     """Cost-dispatched text near-duplicate pairs (round-10 verdict
     #1 — the wedge-dispatch template applied to the text family):
@@ -844,8 +842,8 @@ def near_dup_pairs(
       band, so J=1.0 recall is exactly 1 — the planted-dup oracle
       argument).
     * ``dispatch='auto'`` — MEASURE the prefix-candidate volume and
-      compare to candidates_per_core × defaultParallelism. At or
-      under budget the exact path runs; over it the sketch does.
+      compare to CANDIDATE_BUDGET. At or under budget the exact
+      path runs; over it the sketch does.
       The measurement job builds the same localCheckpoint'ed
       (shingles, sizes, ranked-prefix) triple the exact miner
       consumes, and the exact route is handed THOSE frames
@@ -884,19 +882,7 @@ def near_dup_pairs(
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     ranked = _prefix_tokens(sh, id_col, sizes, t_num, t_den)
     ranked = checkpoint(ranked)
-    # budget_rows pins an ABSOLUTE candidate budget — for callers
-    # whose output must be a pure function of the data (q178's
-    # oracle-bearing catalog query passes the calibrated 3.2M
-    # single-node boundary explicitly, so its route can never flip
-    # with the host's core count; round-11 review finding). The
-    # default scales with the cluster.
-    budget = (
-        budget_rows
-        if budget_rows is not None
-        else candidates_per_core
-        * df.sparkSession.sparkContext.defaultParallelism
-    )
-    if _candidate_volume(ranked) <= budget:
+    if _candidate_volume(ranked) <= CANDIDATE_BUDGET:
         return _prefix_exact_from(sh, sizes, ranked, id_col, t_num, t_den)
     # over budget: hand the sketch the already-checkpointed DISTINCT
     # shingle frame — min()/collect_set() are duplicate-insensitive,

@@ -25,6 +25,19 @@ from pyspark.sql import functions as F
 
 from car_insurance_data_pipeline_spark_spark.session import checkpoint, release
 
+# Small-graph driver routes: at or below these ABSOLUTE edge counts
+# the iterative ops collect the graph and run driver-side instead of
+# paying ~3 exchanges of scheduling per distributed round. Never
+# derived from host parallelism, so an oracle-bearing consumer's
+# route is a pure function of the data. connected_components,
+# pagerank and label_propagation collect py4j Row objects (500k
+# edges ≈ 8 MB of driver state); hits, bfs_distances and kcore
+# collect Arrow frames of two integer columns (~32 MB at 2M edges),
+# so their ceiling is 4× higher. Read at call time: a test forces
+# the distributed loop by patching the constant to 0.
+DRIVER_MAX_EDGES = 500_000
+DRIVER_MAX_EDGES_ARROW = 2_000_000
+
 
 def _normalize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge set as (u < v) pairs, no self-loops, distinct."""
@@ -79,7 +92,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    driver_threshold: int = 500_000,
 ) -> DataFrame:
     """Component label per node: columns (node, component), where
     component = the minimum node id reachable from ``node``. Every
@@ -95,16 +107,16 @@ def connected_components(
     64-bit sum collision is negligible (~n²/2⁶⁵).
 
     Adaptive small-graph path: the seed checksum returns the edge
-    count for free, and when it is ≤ ``driver_threshold`` the labels
+    count for free, and when it is ≤ ``DRIVER_MAX_EDGES`` the labels
     are computed by union-find over the collected edge list instead
     of the iterative star loop — near-dup edge lists are typically
     sparse (most clusters are pairs), and each star round costs a
     fixed ~3 exchanges regardless of size, so sub-threshold graphs
     pay seconds of scheduling for microseconds of work. The bound is
     the same kind of contract as AQE's broadcast threshold or the
-    IVF trainer's sample: ≤ 500k edges ≈ 8 MB on the driver. Label
-    semantics are identical (min reachable id; equality asserted in
-    tests), and above the threshold nothing ever reaches the driver.
+    IVF trainer's sample. Label semantics are identical (min
+    reachable id; equality asserted in tests), and above the
+    threshold nothing ever reaches the driver.
     """
     # Materialize the (possibly expensive) edge-producing plan ONCE:
     # both the self-loop branch and the normalized loop input derive
@@ -139,7 +151,7 @@ def connected_components(
     # (one tiny agg over cached blocks buys a ~1 s round at sf0.1).
     prev = _checksum(e)
 
-    if prev[0] <= driver_threshold:
+    if prev[0] <= DRIVER_MAX_EDGES:
         # small-graph path: union-find over the collected edges
         rows = e.collect()
         parent: dict = {}
@@ -253,7 +265,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     n_iter: int = 15,
-    driver_threshold: int = 500_000,
 ) -> DataFrame:
     """PageRank over a directed edge list → (node, rank), ranks
     summing to 1. The iterative-DataFrame companion to
@@ -270,18 +281,17 @@ def pagerank(
     edge+degree table checkpoints once.
 
     Adaptive small-graph path (the connected_components contract):
-    at or below ``driver_threshold`` distinct edges the whole graph
+    at or below ``DRIVER_MAX_EDGES`` distinct edges the whole graph
     is driver-bounded by contract, and a vectorized numpy power
     iteration replaces ~n_iter×3 distributed jobs with one collect —
     identical formulation, answers agree to float tolerance (1e-9
-    pinned in tests for both paths). Pass ``driver_threshold=0`` to
-    force the distributed loop.
+    pinned in tests for both paths).
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
     # lazy: the dispatch count() materializes the blocks (r12 — the
     # hits()/r11-advice pattern applied to its three siblings)
     e = checkpoint(e)
-    if e.count() <= driver_threshold:
+    if e.count() <= DRIVER_MAX_EDGES:
         out = _pagerank_driver(edges.sparkSession, e, damping, n_iter)
         release(e)
         return out
@@ -416,7 +426,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 6,
-    driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999; public literature)
     over a bipartite edge list → (kind, node, score): ``n_iter``
@@ -424,21 +433,15 @@ def hits(
     the ``src`` side, authority scores for the ``dst`` side.
 
     Adaptive small-graph path (the pagerank/label_propagation
-    contract): at or below ``driver_threshold`` distinct edges the
-    whole graph is driver-bounded by contract and a vectorized numpy
-    power iteration replaces the ~n_iter×4-exchange distributed plan
-    with one Arrow collect — identical formulation; the two routes
-    differ only in float ADD ORDER inside each aggregate (~1 ulp per
-    iteration, the same wobble the distributed plan itself shows
-    across partition counts), which the consumers' ppm quantization
-    absorbs (route equality on the quantized output is pinned in
-    tests at all fixture SFs). The threshold is higher than
-    pagerank's 500k because the collect here is an Arrow transfer of
-    two integer columns (~32 MB at 2M edges), not py4j Row objects,
-    and it is an ABSOLUTE edge count — never derived from host
-    parallelism — so an oracle-bearing consumer's route is a pure
-    function of the data. Pass ``driver_threshold=0`` to force the
-    distributed loop.
+    contract): at or below ``DRIVER_MAX_EDGES_ARROW`` distinct edges
+    the whole graph is driver-bounded by contract and a vectorized
+    numpy power iteration replaces the ~n_iter×4-exchange
+    distributed plan with one Arrow collect — identical formulation;
+    the two routes differ only in float ADD ORDER inside each
+    aggregate (~1 ulp per iteration, the same wobble the distributed
+    plan itself shows across partition counts), which the consumers'
+    ppm quantization absorbs (route equality on the quantized output
+    is pinned in tests at all fixture SFs).
 
     Distributed route (what 100 TB runs): per iteration, two equi
     joins on the edge keys + two partial-agg'd groupBys — each
@@ -455,7 +458,7 @@ def hits(
     # eager=True would run a SECOND construction-time job first
     # (r11 advice; matches the bfs_distances pattern)
     e = checkpoint(e)
-    if e.count() <= driver_threshold:
+    if e.count() <= DRIVER_MAX_EDGES_ARROW:
         out = _hits_driver(edges.sparkSession, e, n_iter)
         release(e)
         return out
@@ -517,7 +520,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 5,
-    driver_threshold: int = 500_000,
 ) -> DataFrame:
     """SYNCHRONOUS label propagation (community detection) over an
     undirected edge list → (node, label). Labels start as node ids;
@@ -541,13 +543,12 @@ def label_propagation(
     every few rounds to cut lineage (the pagerank discipline).
 
     Adaptive small-graph path (the connected_components/pagerank
-    contract): at or below ``driver_threshold`` symmetric edges the
+    contract): at or below ``DRIVER_MAX_EDGES`` symmetric edges the
     rounds run driver-side over Python dicts — 5 synchronous integer
     rounds on a sub-threshold graph cost ~15 distributed jobs of
     pure scheduling otherwise (measured 4.9 s for 260 edges). The
     update rule is integer-exact in both paths, so labels are
-    IDENTICAL (equality-pinned in tests); pass ``driver_threshold=0``
-    to force the distributed loop.
+    IDENTICAL (equality-pinned in tests).
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
     # undirected: propagate across both directions
@@ -557,7 +558,7 @@ def label_propagation(
     # lazy: the dispatch count() below materializes the blocks
     sym = checkpoint(sym)
     n_edges = sym.count()
-    if n_edges <= driver_threshold:
+    if n_edges <= DRIVER_MAX_EDGES:
         rows = [(r.s, r.t) for r in sym.collect()]
         out = _label_propagation_driver(edges.sparkSession, rows, n_iter)
         release(sym)
@@ -637,7 +638,6 @@ def bfs_distances(
     sources: DataFrame,
     max_hops: int,
     node_col: str = "node",
-    driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Multi-source breadth-first hop distances, bounded at
     ``max_hops`` — frontier-expansion BFS as iterated DataFrame ops.
@@ -686,18 +686,14 @@ def bfs_distances(
     if we_ckpted:
         edges = checkpoint(edges)
     # Adaptive small-graph path (the pagerank/label_propagation/hits
-    # contract; optimization r11): at or below ``driver_threshold``
-    # directed edges the graph is driver-bounded by contract and the
-    # hops run as one Arrow collect + a Python BFS — ~max_hops×2
-    # distributed jobs of pure scheduling otherwise. Hop counts are
-    # exact integers, so the two routes are interchangeable
-    # bit-for-bit (equality-pinned in tests). The threshold is an
-    # ABSOLUTE edge count (2M ≈ a 32 MB two-int-column Arrow frame,
-    # the hits sizing) — never derived from host parallelism, so an
-    # oracle-bearing consumer's route is a pure function of the
-    # data. Pass ``driver_threshold=0`` to force the distributed
-    # loop.
-    if edges.count() <= driver_threshold:
+    # contract; optimization r11): at or below
+    # ``DRIVER_MAX_EDGES_ARROW`` directed edges the graph is
+    # driver-bounded by contract and the hops run as one Arrow
+    # collect + a Python BFS — ~max_hops×2 distributed jobs of pure
+    # scheduling otherwise. Hop counts are exact integers, so the
+    # two routes are interchangeable bit-for-bit (equality-pinned in
+    # tests).
+    if edges.count() <= DRIVER_MAX_EDGES_ARROW:
         out = _bfs_driver(
             edges.sparkSession, edges, sources, max_hops, node_col
         )
@@ -771,7 +767,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int,
-    driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """k-core peeling over a DIRECTED-symmetrized edge list: run
     exactly ``rounds`` iterations of (degree count → keep nodes with
@@ -797,15 +792,13 @@ def kcore(
     # lazy: the dispatch count() below materializes the blocks
     sym = checkpoint(edges.select("u", "v"))
     # Adaptive small-graph path (the pagerank/label_propagation/hits
-    # contract; optimization r11): at or below ``driver_threshold``
-    # edges, peeling runs driver-side over Arrow-collected numpy
-    # arrays — ``rounds``×3 distributed jobs of pure scheduling
-    # otherwise. Counts and ids are exact integers, so the routes
-    # are interchangeable bit-for-bit (equality-pinned in tests);
-    # the threshold is an ABSOLUTE edge count (the hits sizing) so a
-    # consumer's route is a pure function of the data. Pass
-    # ``driver_threshold=0`` to force the distributed loop.
-    if sym.count() <= driver_threshold:
+    # contract; optimization r11): at or below
+    # ``DRIVER_MAX_EDGES_ARROW`` edges, peeling runs driver-side over
+    # Arrow-collected numpy arrays — ``rounds``×3 distributed jobs of
+    # pure scheduling otherwise. Counts and ids are exact integers,
+    # so the routes are interchangeable bit-for-bit (equality-pinned
+    # in tests).
+    if sym.count() <= DRIVER_MAX_EDGES_ARROW:
         out = _kcore_driver(edges.sparkSession, sym, k, rounds)
         release(sym)
         return out
@@ -995,12 +988,13 @@ def adjacency_minhash_pairs(
 # (~3M wedges/core in the fully-linear regime); the 30× probe
 # (Σdeg² ≈ 553M) costs 139 s with a 7.4 GB wedge shuffle — still
 # linear, but past the point where the sketch's Θ(candidates)
-# economics win for an interactive query. 3M wedges/core puts the
-# single-node auto-route boundary at ~96M wedges (between the two
-# measured points, ~35 s of exact work) and scales the budget with
-# the cluster: 1000 executors × 8 cores routes exact up to 24B
-# wedges before sketching.
-WEDGES_PER_CORE_DEFAULT = 3_000_000
+# economics win for an interactive query. 3M wedges/core × 32 puts
+# the single-node auto-route boundary at 96M wedges (between the
+# two measured points, ~35 s of exact work). The budget is ABSOLUTE
+# — the calibration measured single-node walls only — so the routes
+# of the three wedge-family consumers are a pure function of the
+# data on any host. Read at call time (tests patch it).
+WEDGE_BUDGET = 96_000_000
 
 
 def count_wedges(edges: DataFrame) -> int:
@@ -1024,7 +1018,6 @@ def adjacency_similarity(
     edges: DataFrame,
     min_ppm: int = 500_000,
     dispatch: str = "auto",
-    wedges_per_core: int = WEDGES_PER_CORE_DEFAULT,
     num_hashes: int = 32,
     bands: int = 16,
 ) -> DataFrame:
@@ -1038,9 +1031,8 @@ def adjacency_similarity(
       candidates with exact verification, Θ(candidates); recall
       probabilistic below Jaccard 1.0 (pinned ≥80% at j≥0.5).
     * ``dispatch='auto'`` — MEASURE Σdeg² (count_wedges, one cheap
-      aggregation) and compare to wedges_per_core ×
-      defaultParallelism: the measured linear-regime budget (see
-      WEDGES_PER_CORE_DEFAULT). At or under budget exact runs;
+      aggregation) and compare to WEDGE_BUDGET, the measured
+      linear-regime budget. At or under budget exact runs;
       over it the sketch does. The one extra job is the price of a
       measured decision — the same contract as cosine_topk's
       dispatch='auto' needing the vector width.
@@ -1063,8 +1055,7 @@ def adjacency_similarity(
     like the adamic_adar top-k finding above.
     """
     if dispatch == "auto":
-        budget = wedges_per_core * edges.sparkSession.sparkContext.defaultParallelism
-        dispatch = "exact" if count_wedges(edges) <= budget else "sketch"
+        dispatch = "exact" if count_wedges(edges) <= WEDGE_BUDGET else "sketch"
     if dispatch == "exact":
         return adjacency_jaccard(edges, min_ppm=min_ppm)
     if dispatch == "sketch":
@@ -1113,7 +1104,6 @@ def _aa_weighted_leg(edges: DataFrame) -> DataFrame:
 def adamic_adar(
     edges: DataFrame,
     dispatch: str = "auto",
-    wedges_per_core: int = WEDGES_PER_CORE_DEFAULT,
     num_hashes: int = 32,
     bands: int = 16,
 ) -> DataFrame:
@@ -1145,9 +1135,8 @@ def adamic_adar(
       Identical neighbor sets collide in every band, so recall at
       neighborhood-Jaccard 1.0 is exactly 1.
     * ``dispatch='auto'`` — MEASURE Σ deg² (count_wedges) against
-      wedges_per_core × defaultParallelism, the calibrated budget
-      shared with adjacency_similarity; exact at or under, sketch
-      over.
+      WEDGE_BUDGET, the calibrated budget shared with
+      adjacency_similarity; exact at or under, sketch over.
 
     SCOPE OF THE SKETCH (measured, round 11): the sketch is
     faithful for SIMILAR-NEIGHBORHOOD consumers (pairs with high
@@ -1169,11 +1158,7 @@ def adamic_adar(
     work).
     """
     if dispatch == "auto":
-        budget = (
-            wedges_per_core
-            * edges.sparkSession.sparkContext.defaultParallelism
-        )
-        dispatch = "exact" if count_wedges(edges) <= budget else "sketch"
+        dispatch = "exact" if count_wedges(edges) <= WEDGE_BUDGET else "sketch"
     e1 = _aa_weighted_leg(edges)
     e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("w"))
     if dispatch == "exact":
@@ -1197,7 +1182,6 @@ def adamic_adar(
 def clustering_coefficient(
     edges: DataFrame,
     dispatch: str = "auto",
-    wedges_per_core: int = WEDGES_PER_CORE_DEFAULT,
 ) -> DataFrame:
     """Local clustering coefficient per node: cc = 2·triangles /
     (deg·(deg−1)) for every node with deg ≥ 2. Input: SYMMETRIC
@@ -1212,7 +1196,9 @@ def clustering_coefficient(
     * ``dispatch='exact'`` — the center-wedge expansion: per node,
       wedges (v < w) equi-joined on the center then closed against
       the edge set. Θ(Σ deg²) wedge rows — the historical q274
-      plan, cheapest at fixture scale where the expansion fits.
+      plan, what runs at both fixture SFs (cheapest there on 32
+      threads; on 4 CPUs q274 at sf0.1 measured 4.1 s vs 3.4 s for
+      the oriented route — the price of a host-independent route).
     * ``dispatch='oriented'`` — degree-oriented EDGE ITERATION
       with adjacency intersection (the q135 triangle plan —
       Chiba–Nishizeki / Schank–Wagner; public literature): orient
@@ -1228,16 +1214,12 @@ def clustering_coefficient(
       worst-case, and the per-corner credit is one unionAll of
       three projections at TRIANGLE (not wedge) scale.
     * ``dispatch='auto'`` — MEASURE Σ deg² (count_wedges) against
-      wedges_per_core × defaultParallelism (the calibrated budget
-      shared with adjacency_similarity/adamic_adar); center-wedge
-      at or under, oriented over.
+      WEDGE_BUDGET (the calibrated budget shared with
+      adjacency_similarity/adamic_adar); center-wedge at or under,
+      oriented over.
     """
     if dispatch == "auto":
-        budget = (
-            wedges_per_core
-            * edges.sparkSession.sparkContext.defaultParallelism
-        )
-        dispatch = "exact" if count_wedges(edges) <= budget else "oriented"
+        dispatch = "exact" if count_wedges(edges) <= WEDGE_BUDGET else "oriented"
     deg = edges.groupBy("u").agg(F.count("*").cast("bigint").alias("d"))
     if dispatch == "exact":
         e1 = edges.select(F.col("u").alias("node"), F.col("v").alias("w1"))

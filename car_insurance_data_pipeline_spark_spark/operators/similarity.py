@@ -81,6 +81,10 @@ def cosine_topk(
     corpus scan — a narrow map per corpus row, then one shuffle for
     the per-query window. Self-matches (qid == cid) are excluded.
     """
+    if dispatch not in ("auto", "jvm", "pandas"):
+        raise ValueError(
+            f"dispatch must be 'auto', 'jvm' or 'pandas', got {dispatch!r}"
+        )
     if dispatch == "auto":
         if dim is None:
             from car_insurance_data_pipeline_spark_spark.functions.vectors import (

@@ -1700,13 +1700,15 @@ def q274_clustering_coefficient(
 
     Scale (round-11): routed through
     operators/graph.clustering_coefficient(dispatch='auto') — the
-    measured Σ deg² budget picks between the center-wedge
-    expansion (the historical plan, Θ(Σ deg²), what runs at
-    fixture scale so the oracle replays it) and the degree-ordered
-    "forward" enumeration (Θ(Σ d_out²) = O(m^1.5), the hub-heavy
-    100 TB path). Both routes are EXACT — equality is pinned in
-    tests/test_graph_dispatch.py — so the auto route cannot move
-    the oracle; the top-100 is TakeOrdered.
+    measured Σ deg² against the absolute ``graph.WEDGE_BUDGET``
+    (96M) picks between the center-wedge expansion (the historical
+    plan, Θ(Σ deg²), the one the oracle replays) and the
+    degree-ordered "forward" enumeration (Θ(Σ d_out²) = O(m^1.5),
+    the hub-heavy 100 TB path). The sf0.1 graph measures
+    18,440,624 wedges, under the budget, so the center-wedge plan
+    runs at both fixture SFs on any host. Both routes are EXACT —
+    equality is pinned in tests/test_graph_dispatch.py — so the
+    auto route cannot move the oracle; the top-100 is TakeOrdered.
     """
     from car_insurance_data_pipeline_spark_spark.operators.graph import (
         clustering_coefficient,

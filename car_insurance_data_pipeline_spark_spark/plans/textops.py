@@ -412,17 +412,13 @@ def q178_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop boundary.
 
     Round-11: routed through near_dup_pairs(dispatch='auto') — the
-    measured candidate budget picks the route instead of the
-    caller. An ORACLE-BEARING query must be a pure function of the
-    data, so the budget is pinned ABSOLUTE (budget_rows = 3.2M,
-    the calibrated single-node boundary) rather than scaled by the
-    host's core count — a 4-core runner must route identically to
-    the 32-core bench machine (round-11 review finding). Both
-    fixture SFs sit far under it (4.3k / 695k candidates), so the
-    auto route runs the EXACT path here and the brute-force oracle
-    still hash-matches; the 10× fixture (6.95M candidates) routes
-    to the MinHash-LSH sketch, which is the 100 TB behavior this
-    dispatch exists for.
+    measured candidate volume against the absolute
+    ``dedup.CANDIDATE_BUDGET`` (3.2M) picks the route, so the route
+    is a function of the data alone. Both fixture SFs sit far under
+    it (4.3k / 695k candidates), so the auto route runs the EXACT
+    path here and the brute-force oracle still hash-matches; the
+    10× fixture (6.95M candidates) routes to the MinHash-LSH
+    sketch, which is the 100 TB behavior this dispatch exists for.
     """
     from car_insurance_data_pipeline_spark_spark.operators.dedup import (
         near_dup_pairs,
@@ -430,8 +426,7 @@ def q178_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     return near_dup_pairs(
-        d, "doc_id", "text", k=3, threshold=0.3, dispatch="auto",
-        budget_rows=3_200_000,
+        d, "doc_id", "text", k=3, threshold=0.3, dispatch="auto"
     )
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from car_insurance_data_pipeline_spark_spark.operators import clustering
 from car_insurance_data_pipeline_spark_spark.operators.clustering import (
     kmeans_fit_predict,
 )
@@ -49,7 +50,7 @@ def test_deterministic_across_partitioning(spark):
     assert a == b
 
 
-def test_driver_and_distributed_routes_bit_identical(spark):
+def test_driver_and_distributed_routes_bit_identical(spark, monkeypatch):
     """The q136 route-equality pin (optimization r11): the
     driver-side Lloyd recurrence must emit EXACTLY the distributed
     loop's assignments — same numpy distance expression, integer-
@@ -60,11 +61,10 @@ def test_driver_and_distributed_routes_bit_identical(spark):
         r.vec_id: r.cluster
         for r in kmeans_fit_predict(emb, k=K, n_iter=5).collect()
     }
+    monkeypatch.setattr(clustering, "KMEANS_DRIVER_MAX_ROWS", 0)
     b = {
         r.vec_id: r.cluster
-        for r in kmeans_fit_predict(
-            emb, k=K, n_iter=5, driver_threshold=0
-        ).collect()
+        for r in kmeans_fit_predict(emb, k=K, n_iter=5).collect()
     }
     assert a == b
 

@@ -9,6 +9,7 @@ import random
 
 import pytest
 
+from car_insurance_data_pipeline_spark_spark.operators import graph
 from car_insurance_data_pipeline_spark_spark.operators.graph import (
     pagerank,
     connected_components,
@@ -36,56 +37,55 @@ def _union_find(edges):
     return comp
 
 
-def _check(spark, edges):
+def _check(spark, monkeypatch, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
     want = _union_find(edges)
     # BOTH paths must agree with the reference: the adaptive
-    # driver-side union-find (default threshold) and the distributed
-    # star loop (threshold forced to 0)
-    for thr in (500_000, 0):
+    # driver-side union-find (default ceiling) and the distributed
+    # star loop (ceiling patched to 0)
+    for thr in (graph.DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", thr)
         got = {
             r.node: r.component
-            for r in connected_components(
-                df, "src", "dst", driver_threshold=thr
-            ).collect()
+            for r in connected_components(df, "src", "dst").collect()
         }
-        assert got == want, f"driver_threshold={thr}"
+        assert got == want, f"DRIVER_MAX_EDGES={thr}"
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_cc_random_graphs(spark, seed):
+def test_cc_random_graphs(spark, monkeypatch, seed):
     rng = random.Random(seed)
     n = 120
     edges = [
         (rng.randrange(n), rng.randrange(n)) for _ in range(90)
     ]
     edges = [(a, b) for a, b in edges if a != b]
-    _check(spark, edges)
+    _check(spark, monkeypatch, edges)
 
 
-def test_cc_long_chain(spark):
+def test_cc_long_chain(spark, monkeypatch):
     # a 60-node path: worst case for plain label propagation, must
     # still converge fast via star contraction
-    _check(spark, [(i, i + 1) for i in range(60)])
+    _check(spark, monkeypatch, [(i, i + 1) for i in range(60)])
 
 
-def test_cc_two_cliques_and_bridge(spark):
+def test_cc_two_cliques_and_bridge(spark, monkeypatch):
     k1 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
     k2 = [(a, b) for a in range(10, 15) for b in range(a + 1, 15)]
-    _check(spark, k1 + k2 + [(4, 10)])
+    _check(spark, monkeypatch, k1 + k2 + [(4, 10)])
 
 
-def test_cc_duplicate_and_reversed_edges(spark):
-    _check(spark, [(1, 2), (2, 1), (1, 2), (3, 4)])
+def test_cc_duplicate_and_reversed_edges(spark, monkeypatch):
+    _check(spark, monkeypatch, [(1, 2), (2, 1), (1, 2), (3, 4)])
 
 
-def test_cc_self_loops(spark):
+def test_cc_self_loops(spark, monkeypatch):
     """Self-loop-only nodes must still be emitted (own label); a
     self-loop on a connected node must not shadow its star root."""
-    _check(spark, [(7, 7), (1, 2), (2, 2), (9, 9), (9, 9)])
+    _check(spark, monkeypatch, [(7, 7), (1, 2), (2, 2), (9, 9), (9, 9)])
 
 
-def test_cc_releases_superseded_checkpoints(spark):
+def test_cc_releases_superseded_checkpoints(spark, monkeypatch):
     """The iteration loop must not accumulate one cached edge-set
     copy per round: superseded localCheckpoints are released
     deterministically, so the persistent-RDD count after a
@@ -94,8 +94,9 @@ def test_cc_releases_superseded_checkpoints(spark):
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     edges = [(i, i + 1) for i in range(60)]  # chain → several rounds
     df = spark.createDataFrame(edges, "src long, dst long")
-    # threshold 0 forces the ITERATIVE path this test exists for
-    out = connected_components(df, "src", "dst", driver_threshold=0)
+    # ceiling 0 forces the ITERATIVE path this test exists for
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    out = connected_components(df, "src", "dst")
     assert out.count() == 61
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     # raw-input checkpoint + final edge checkpoint may remain alive
@@ -152,14 +153,15 @@ def test_pagerank_random_graph_sums_to_one(spark, seed):
         assert abs(got[k] - want[k]) < 1e-9
 
 
-def test_pagerank_distributed_path_matches_numpy(spark):
-    """driver_threshold=0 forces the Pregel-style DataFrame loop —
+def test_pagerank_distributed_path_matches_numpy(spark, monkeypatch):
+    """DRIVER_MAX_EDGES=0 forces the Pregel-style DataFrame loop —
     both paths must land on the same fixpoint."""
     edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 3), (3, 5)]
     df = spark.createDataFrame(edges, "src long, dst long")
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     got = {
         r["node"]: r["rank"]
-        for r in pagerank(df, n_iter=15, driver_threshold=0).collect()
+        for r in pagerank(df, n_iter=15).collect()
     }
     want = _np_pagerank(edges, n_iter=15)
     assert set(got) == set(want)
@@ -168,15 +170,16 @@ def test_pagerank_distributed_path_matches_numpy(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_distributed_no_dangling_skips_nothing(spark):
+def test_pagerank_distributed_no_dangling_skips_nothing(spark, monkeypatch):
     """Symmetric graph (no dangling nodes) through the distributed
     loop: the dangling-free fast path must equal the reference."""
     base = [(1, 2), (2, 3), (3, 1)]
     edges = base + [(v, u) for u, v in base]
     df = spark.createDataFrame(edges, "src long, dst long")
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     got = {
         r["node"]: r["rank"]
-        for r in pagerank(df, n_iter=12, driver_threshold=0).collect()
+        for r in pagerank(df, n_iter=12).collect()
     }
     want = _np_pagerank(edges, n_iter=12)
     for k in want:
@@ -224,9 +227,9 @@ def test_hits_driver_matches_reference(spark):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_hits_routes_agree_on_quantized_output(spark, seed):
+def test_hits_routes_agree_on_quantized_output(spark, monkeypatch, seed):
     """The q180 route-equality pin: driver (numpy) vs distributed
-    (in-plan unrolled loop, driver_threshold=0) must emit IDENTICAL
+    (in-plan unrolled loop, DRIVER_MAX_EDGES_ARROW=0) must emit IDENTICAL
     rows after the consumer's ppm quantization — the two routes
     differ only in float add order inside aggregates, which
     round(score*1e6) absorbs (the same wobble the oracle already
@@ -242,9 +245,10 @@ def test_hits_routes_agree_on_quantized_output(spark, seed):
     df = spark.createDataFrame(edges, "src long, dst long")
 
     def quantized(threshold):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES_ARROW", threshold)
         return {
             (r["kind"], r["node"]): r["ppm"]
-            for r in hits(df, n_iter=6, driver_threshold=threshold)
+            for r in hits(df, n_iter=6)
             .select(
                 "kind",
                 "node",
@@ -253,7 +257,7 @@ def test_hits_routes_agree_on_quantized_output(spark, seed):
             .collect()
         }
 
-    assert quantized(2_000_000) == quantized(0)
+    assert quantized(graph.DRIVER_MAX_EDGES_ARROW) == quantized(0)
 
 
 # ---- round-5: q113 oracle quantization parity (property-based) ----
@@ -386,7 +390,7 @@ def test_bfs_cycle_terminates_and_empty_frontier(spark):
     assert got == {1: 0, 2: 1, 3: 1}
 
 
-def test_bfs_matches_networkx_free_reference(spark):
+def test_bfs_matches_networkx_free_reference(spark, monkeypatch):
     """Random-graph BFS vs a pure-python reference implementation."""
     import random
     from collections import deque
@@ -416,12 +420,12 @@ def test_bfs_matches_networkx_free_reference(spark):
     e = _sym(spark, pairs)
     src = spark.createDataFrame([(s,) for s in srcs], "node long")
     # BOTH routes must match the reference: the adaptive driver-side
-    # BFS (default threshold) and the distributed frontier loop
-    for thr in (2_000_000, 0):
+    # BFS (default ceiling) and the distributed frontier loop
+    for thr in (graph.DRIVER_MAX_EDGES_ARROW, 0):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES_ARROW", thr)
         got = {r["node"]: r["dist"]
-               for r in bfs_distances(
-                   e, src, max_hops=4, driver_threshold=thr).collect()}
-        assert got == expect, f"driver_threshold={thr}"
+               for r in bfs_distances(e, src, max_hops=4).collect()}
+        assert got == expect, f"DRIVER_MAX_EDGES_ARROW={thr}"
 
 
 # ---------------------------------------------------------------------------
@@ -439,20 +443,20 @@ def test_kcore_triangle_with_pendant_chain(spark):
     assert got == {1: 2, 2: 2, 3: 2}
 
 
-def test_kcore_insufficient_rounds_gives_partial_peel(spark):
+def test_kcore_insufficient_rounds_gives_partial_peel(spark, monkeypatch):
     """Fixed-round contract: with rounds=1 only the first fringe is
     removed — the state matches one unrolled oracle stage, not the
     converged core."""
     from car_insurance_data_pipeline_spark_spark.operators.graph import kcore
 
     e = _sym(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)])
-    for thr in (2_000_000, 0):
+    for thr in (graph.DRIVER_MAX_EDGES_ARROW, 0):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES_ARROW", thr)
         got = {r["u"]: r["core_degree"]
-               for r in kcore(e, k=2, rounds=1,
-                              driver_threshold=thr).collect()}
+               for r in kcore(e, k=2, rounds=1).collect()}
         # round 1 removes only node 6 (degree 1); 5 keeps edge to 4
         assert got == {1: 2, 2: 2, 3: 3, 4: 2, 5: 1}, (
-            f"driver_threshold={thr}")
+            f"DRIVER_MAX_EDGES_ARROW={thr}")
 
 
 def test_kcore_clique_minus_nothing(spark):
@@ -465,7 +469,7 @@ def test_kcore_clique_minus_nothing(spark):
     assert got == {i: 4 for i in range(5)}
 
 
-def test_kcore_matches_pure_python_peel(spark):
+def test_kcore_matches_pure_python_peel(spark, monkeypatch):
     import random
 
     from car_insurance_data_pipeline_spark_spark.operators.graph import kcore
@@ -490,14 +494,14 @@ def test_kcore_matches_pure_python_peel(spark):
     expect = {x: len(ns) for x, ns in adj.items()}
     e = _sym(spark, pairs)
     # BOTH routes must match the reference (driver peel + loop)
-    for thr in (2_000_000, 0):
+    for thr in (graph.DRIVER_MAX_EDGES_ARROW, 0):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES_ARROW", thr)
         got = {r["u"]: r["core_degree"]
-               for r in kcore(
-                   e, k=k, rounds=n, driver_threshold=thr).collect()}
-        assert got == expect, f"driver_threshold={thr}"
+               for r in kcore(e, k=k, rounds=n).collect()}
+        assert got == expect, f"DRIVER_MAX_EDGES_ARROW={thr}"
 
 
-def test_checkpoint_modes_reliable_equals_local(spark, request):
+def test_checkpoint_modes_reliable_equals_local(spark, monkeypatch, request):
     """Durability follows configuration: with no checkpoint dir the
     iterative ops cut lineage with executor-local blocks, and with one
     set every cut goes through reliable checkpoint files. Both must
@@ -514,19 +518,22 @@ def test_checkpoint_modes_reliable_equals_local(spark, request):
     e = _sym(spark, pairs)
     df = spark.createDataFrame(pairs, "src long, dst long")
     src = spark.createDataFrame([(0,)], "node long")
+    # every op on its distributed loop, where the lineage cuts happen
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES_ARROW", 0)
 
     def run_all():
         return (
             {(r.node, r.dist) for r in bfs_distances(
-                e, src, max_hops=4, driver_threshold=0).collect()},
+                e, src, max_hops=4).collect()},
             {(r.u, r.core_degree) for r in kcore(
-                e, k=2, rounds=6, driver_threshold=0).collect()},
+                e, k=2, rounds=6).collect()},
             {(r.node, r.component) for r in connected_components(
-                df, driver_threshold=0).collect()},
+                df).collect()},
             {(r.node, r.label) for r in label_propagation(
-                df, n_iter=3, driver_threshold=0).collect()},
+                df, n_iter=3).collect()},
             {(r.node, round(r.rank, 9)) for r in pagerank(
-                df, n_iter=5, driver_threshold=0).collect()},
+                df, n_iter=5).collect()},
         )
 
     local = run_all()
@@ -537,7 +544,7 @@ def test_checkpoint_modes_reliable_equals_local(spark, request):
 
 
 def test_reliable_checkpoint_files_deleted_for_superseded_frames(
-    spark, reliable_checkpoint_dir
+    spark, monkeypatch, reliable_checkpoint_dir
 ):
     """r6 advisor fix: in reliable mode Spark only deletes checkpoint
     FILES under spark.cleaner.referenceTracking.cleanCheckpoints
@@ -552,7 +559,8 @@ def test_reliable_checkpoint_files_deleted_for_superseded_frames(
 
     pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 0), (5, 6)]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    ranks = pagerank(df, n_iter=6, driver_threshold=0)
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    ranks = pagerank(df, n_iter=6)
     assert ranks.count() == 7
     rdd_dirs = [
         d

@@ -2,8 +2,8 @@
 adamic_adar and clustering_coefficient run the exact wedge expansion
 unconditionally until this round — Θ(Σ deg²) with no measured escape
 on hub-heavy graphs. Both now route behind the SAME calibrated
-budget as adjacency_similarity (count_wedges vs wedges_per_core ×
-parallelism). Pins: identical schemas across routes, value equality
+budget as adjacency_similarity (count_wedges vs the absolute
+WEDGE_BUDGET). Pins: identical schemas across routes, value equality
 where both routes are exact (clustering_coefficient), exact-anchor
 recall + per-pair value equality for the AA sketch, and the auto
 routing itself in both directions."""
@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+
+from car_insurance_data_pipeline_spark_spark.operators import graph
 
 
 def _edges(spark, pairs):
@@ -34,7 +36,7 @@ _PAIRS = (
 )
 
 
-def test_adamic_adar_dispatch_routes_and_recall(spark):
+def test_adamic_adar_dispatch_routes_and_recall(spark, monkeypatch):
     from car_insurance_data_pipeline_spark_spark.operators.graph import (
         adamic_adar,
         count_wedges,
@@ -68,15 +70,17 @@ def test_adamic_adar_dispatch_routes_and_recall(spark):
         f"sketch recall {hit}/{len(clique_pairs)} below the 80% floor"
     )
     # auto routes exact under budget (same rows), sketch over budget
-    under = rows(adamic_adar(e, dispatch="auto", wedges_per_core=n_wedges))
+    monkeypatch.setattr(graph, "WEDGE_BUDGET", n_wedges)
+    under = rows(adamic_adar(e, dispatch="auto"))
     assert under == exact
-    over = rows(adamic_adar(e, dispatch="auto", wedges_per_core=0))
+    monkeypatch.setattr(graph, "WEDGE_BUDGET", 0)
+    over = rows(adamic_adar(e, dispatch="auto"))
     assert over == sketch
     with pytest.raises(ValueError):
         adamic_adar(e, dispatch="nonsense")
 
 
-def test_clustering_coefficient_routes_are_identical(spark):
+def test_clustering_coefficient_routes_are_identical(spark, monkeypatch):
     from car_insurance_data_pipeline_spark_spark.operators.graph import (
         clustering_coefficient,
         count_wedges,
@@ -105,12 +109,50 @@ def test_clustering_coefficient_routes_are_identical(spark):
     # path interior nodes have no triangles
     assert exact[21] == (2, 0, 0)
     # auto in both directions
-    assert rows(
-        clustering_coefficient(e, dispatch="auto",
-                               wedges_per_core=n_wedges)
-    ) == exact
-    assert rows(
-        clustering_coefficient(e, dispatch="auto", wedges_per_core=0)
-    ) == exact
+    monkeypatch.setattr(graph, "WEDGE_BUDGET", n_wedges)
+    assert rows(clustering_coefficient(e, dispatch="auto")) == exact
+    monkeypatch.setattr(graph, "WEDGE_BUDGET", 0)
+    assert rows(clustering_coefficient(e, dispatch="auto")) == exact
     with pytest.raises(ValueError):
         clustering_coefficient(e, dispatch="nonsense")
+
+
+def test_dispatch_budgets_are_module_constants():
+    """Every measure-then-route budget is one absolute module
+    constant (graph.DRIVER_MAX_EDGES / DRIVER_MAX_EDGES_ARROW /
+    WEDGE_BUDGET, clustering.KMEANS_DRIVER_MAX_ROWS,
+    dedup.CANDIDATE_BUDGET): no public operator takes a per-call
+    budget option, and no operator scales a budget by the host's
+    core count — so an oracle-bearing query routes the same on any
+    host. Static check, no Spark."""
+    import ast
+    import pathlib
+
+    from car_insurance_data_pipeline_spark_spark import operators
+
+    banned = {
+        "driver_threshold",
+        "wedges_per_core",
+        "candidates_per_core",
+        "budget_rows",
+    }
+    knobs, host_reads = [], []
+    for path in sorted(pathlib.Path(operators.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) and node.name[0] != "_":
+                a = node.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg in banned:
+                        knobs.append(f"{path.name}:{node.name}({arg.arg})")
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "defaultParallelism"
+            ) or (
+                isinstance(node, ast.Constant)
+                and node.value == "defaultParallelism"
+            ):
+                host_reads.append(f"{path.name}:{node.lineno}")
+    assert not knobs, f"per-call budget options: {knobs}"
+    assert not host_reads, f"defaultParallelism read at: {host_reads}"

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from car_insurance_data_pipeline_spark_spark.operators import graph
 from car_insurance_data_pipeline_spark_spark.operators.graph import (
     connected_components,
     label_propagation,
@@ -73,15 +74,16 @@ def test_deterministic_across_partitioning_and_direction(spark):
     assert a == b
 
 
-def test_driver_and_distributed_paths_identical(spark):
+def test_driver_and_distributed_paths_identical(spark, monkeypatch):
     """The adaptive driver path must produce bit-identical labels to
     the distributed loop (both are exact integer recurrences)."""
     rows = [(1, 2), (2, 3), (3, 4), (4, 1), (5, 6), (2, 5), (7, 8),
             (8, 9), (9, 7), (3, 7)]
     e = _edges(spark, rows)
     a = {r.node: r.label for r in label_propagation(e, n_iter=4).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     b = {
         r.node: r.label
-        for r in label_propagation(e, n_iter=4, driver_threshold=0).collect()
+        for r in label_propagation(e, n_iter=4).collect()
     }
     assert a == b

@@ -183,13 +183,14 @@ def test_ratio_exact():
     assert _ratio(0.25) == (1, 4)
 
 
-def test_near_dup_dispatch_routes_and_agrees(spark):
+def test_near_dup_dispatch_routes_and_agrees(spark, monkeypatch):
     """Round-11 cost dispatch (the wedge-dispatch template applied
     to the text family): explicit routes run their named paths;
     auto MEASURES the prefix-candidate volume and routes under /
     over the budget; and on a corpus with planted EXACT duplicates
     both routes surface every planted pair (J=1.0 collides in every
     LSH band — the q72 oracle argument), with identical values."""
+    from car_insurance_data_pipeline_spark_spark.operators import dedup
     from car_insurance_data_pipeline_spark_spark.operators.dedup import (
         count_prefix_candidates,
         near_dup_pairs,
@@ -239,16 +240,18 @@ def test_near_dup_dispatch_routes_and_agrees(spark):
     )
     assert n_cand > 0
     # auto under budget -> exact answer, identically
+    monkeypatch.setattr(dedup, "CANDIDATE_BUDGET", n_cand)
     under = rows(
         near_dup_pairs(corpus, "doc_id", "text", threshold=0.5,
-                       dispatch="auto", candidates_per_core=n_cand)
+                       dispatch="auto")
     )
     assert under == exact
     # auto over budget -> the sketch route (recall still 1.0 on the
     # planted pairs; subset of exact)
+    monkeypatch.setattr(dedup, "CANDIDATE_BUDGET", 0)
     over = rows(
         near_dup_pairs(corpus, "doc_id", "text", threshold=0.5,
-                       dispatch="auto", candidates_per_core=0)
+                       dispatch="auto")
     )
     assert over == sketch
     with pytest.raises(ValueError):

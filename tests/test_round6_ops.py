@@ -229,7 +229,7 @@ def test_adjacency_minhash_recall_and_exactness(spark):
     assert recall >= 0.8, recall
 
 
-def test_adjacency_similarity_dispatch_routes_and_agrees(spark):
+def test_adjacency_similarity_dispatch_routes_and_agrees(spark, monkeypatch):
     """Cost-based wedge-family dispatch (round-9 verdict #7): the
     auto route must (1) measure the wedge count and pick exact under
     budget / sketch over it, and (2) the two routes must emit
@@ -265,17 +265,17 @@ def test_adjacency_similarity_dispatch_routes_and_agrees(spark):
     assert exact == sketch
     assert {(p[0], p[1]) for p in exact} >= {(2 * i, 2 * i + 1) for i in range(10)}
 
-    # auto routing: a huge per-core budget keeps it exact; a zero
-    # budget forces the sketch. Both must still return the anchor set.
+    # auto routing: a huge budget keeps it exact; a zero budget
+    # forces the sketch. Both must still return the anchor set.
+    from car_insurance_data_pipeline_spark_spark.operators import graph
+
+    monkeypatch.setattr(graph, "WEDGE_BUDGET", 10**12)
     auto_exact = rows(
-        adjacency_similarity(
-            e, min_ppm=1_000_000, dispatch="auto", wedges_per_core=10**12
-        )
+        adjacency_similarity(e, min_ppm=1_000_000, dispatch="auto")
     )
+    monkeypatch.setattr(graph, "WEDGE_BUDGET", 0)
     auto_sketch = rows(
-        adjacency_similarity(
-            e, min_ppm=1_000_000, dispatch="auto", wedges_per_core=0
-        )
+        adjacency_similarity(e, min_ppm=1_000_000, dispatch="auto")
     )
     assert auto_exact == exact
     assert auto_sketch == sketch

@@ -32,6 +32,14 @@ def test_auto_dispatch_without_width_raises(emb):
         cosine_topk(q, emb, "vec_id", "embedding", k=5)
 
 
+def test_unknown_dispatch_raises(emb):
+    """A misspelled route must refuse, not silently run the JVM path
+    (the same ValueError every other dispatcher raises)."""
+    q = emb.filter(F.col("vec_id") < 10)
+    with pytest.raises(ValueError, match="'pands'"):
+        cosine_topk(q, emb, "vec_id", "embedding", k=5, dispatch="pands")
+
+
 def test_pandas_variant_matches_exact(emb, exact):
     q = emb.filter(F.col("vec_id") < 10)
     pand = cosine_topk_pandas(q, emb, "vec_id", "embedding", k=5).collect()
