@@ -5,7 +5,7 @@ The engine's multimodal data model (north star): media are opaque
 (modality, byte length, format sniffed from magic bytes). Decode /
 feature-extract run as Arrow-batched Pandas UDFs over mapInPandas.
 
-Decode is REAL for seven formats, stub for the rest:
+Decode is REAL for twelve codecs plus animated-GIF frame sampling:
 - P6 PPM and RIFF/WAVE PCM16 — uncompressed, pure-numpy parsers;
 - PNG (truecolor 8-bit) — genuinely compressed; DEFLATE via stdlib
   zlib, CRC-32 chunk walk, all five filter reconstructions;
@@ -16,7 +16,14 @@ Decode is REAL for seven formats, stub for the rest:
   canonical Huffman decode, dequant, inverse zigzag, IDCT;
 - BMP (24-bit) — bottom-up rows, BGR, 4-byte row padding;
 - TIFF (8-bit RGB, uncompressed) — IFD walk with inline-vs-offset
-  value resolution and multi-strip reassembly.
+  value resolution and multi-strip reassembly;
+- TGA (RLE), QOI and PCX (RLE) — run-length and opcode streams;
+- Sun AU — G.711 mu-law expansion;
+- ICO — directory walk into a 32bpp DIB with its AND mask;
+- animated GIF89a — every frame walked, every k-th one decoded.
+Each codec's ``extract_*`` function is its decoder plus an output
+field list handed to ``_decode_map``, the one mapInPandas wrapper
+and the one NULL-row error policy.
 mp3/mp4 decode stays a clearly-marked deterministic STUB: their
 codec libraries are not in this container and their codecs are not
 stdlib-implementable at reasonable size. The ``decoder`` seam in
@@ -25,7 +32,9 @@ stdlib-implementable at reasonable size. The ``decoder`` seam in
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -119,6 +128,70 @@ def extract_features(
     return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
+# What a malformed, truncated or hostile payload raises from the
+# decoders below: their own ValueError checks, TypeError /
+# IndexError from reads past the end, struct.error from a short
+# unpack, zlib.error from a corrupt DEFLATE stream. Anything else
+# (MemoryError, a ZeroDivisionError) is a decoder fault and fails
+# the batch loudly.
+_UNDECODABLE = (ValueError, TypeError, IndexError, struct.error, zlib.error)
+
+_RGB_MEANS = [
+    ("width", "int"),
+    ("height", "int"),
+    ("mean_r", "double"),
+    ("mean_g", "double"),
+    ("mean_b", "double"),
+]
+
+
+def _decode_batch(
+    pdf: pd.DataFrame,
+    id_col: str,
+    payload_col: str,
+    rows: Callable[[bytes], list[tuple]],
+    fields: list[tuple[str, str]],
+) -> pd.DataFrame:
+    """The per-batch body of ``_decode_map`` (which states its
+    contract), kept at module level so it runs without Spark."""
+    null = [(None,) * len(fields)]
+    out = []
+    for did, b in zip(pdf[id_col], pdf[payload_col]):
+        try:
+            # the whole fan-out is built before any row is kept, so a
+            # payload that fails part-way leaves no partial rows
+            feats = null if b is None else list(rows(bytes(b)))
+        except _UNDECODABLE:
+            feats = null
+        out.extend((did, *f) for f in feats)
+    return pd.DataFrame(out, columns=[id_col] + [n for n, _ in fields])
+
+
+def _decode_map(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    rows: Callable[[bytes], list[tuple]],
+    fields: list[tuple[str, str]],
+) -> DataFrame:
+    """The one decode path behind every codec extractor.
+
+    ``rows(payload)`` returns the feature tuples for one payload (one
+    tuple for a still image or a clip, one per sampled frame for an
+    animation); ``fields`` names and types them, giving both the
+    output schema and the pandas column names. Output: <id_col>
+    long, then ``fields``. A NULL payload, or one whose decode
+    raises any of ``_UNDECODABLE``, surfaces as exactly one all-NULL
+    feature row — never a crashed batch, never part of a fan-out."""
+    schema = ", ".join(f"{n} {t}" for n, t in [(id_col, "long")] + fields)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _decode_batch(pdf, id_col, payload_col, rows, fields)
+
+    return df.select(id_col, payload_col).mapInPandas(run, schema)
+
+
 # ---------------------------------------------------------------------------
 # REAL compressed codec: PNG (truecolor 8-bit). DEFLATE lives in the
 # Python stdlib (zlib), so — unlike jpeg/mp3, whose codec libraries
@@ -134,9 +207,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + ctype
@@ -151,9 +221,6 @@ def synthesize_png(seed: int, width: int = 16, height: int = 8) -> bytes:
     so an 8-row image exercises every PNG filter (None, Sub, Up,
     Average, Paeth) — the decoder must reconstruct all five to
     recover the closed-form pixel law the oracle recomputes."""
-    import struct
-    import zlib
-
     import numpy as np
 
     bpp = 3
@@ -211,9 +278,6 @@ def decode_png_bytes(b: bytes) -> tuple[int, int, float, float, float]:
     and return (width, height, mean_r, mean_g, mean_b). Raises
     ValueError on malformed input (bad magic/CRC/filter byte,
     short pixel data, unsupported color mode)."""
-    import struct
-    import zlib
-
     import numpy as np
 
     if b[: len(_PNG_SIG)] != _PNG_SIG:
@@ -301,29 +365,10 @@ def extract_png_features(
 ) -> DataFrame:
     """mapInPandas over PNG payloads through the REAL compressed
     decoder (CRC walk → inflate → filter reconstruction). Output:
-    <id>, width, height, mean_r, mean_g, mean_b; undecodable
-    payloads surface as NULL feature rows."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double"
+    <id>, width, height, mean_r, mean_g, mean_b."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_png_bytes(b)], _RGB_MEANS
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl = decode_png_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl))
-                except (ValueError, TypeError):
-                    rows.append((did, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def frame_sample_plan(
@@ -416,8 +461,6 @@ def synthesize_wav(
     """Deterministic PCM16 mono WAV: sample j =
     ((seed*13 + j) % 256 - 128) * 256. Same closed-form-oracle idea
     as synthesize_ppm."""
-    import struct
-
     import numpy as np
 
     samples = (
@@ -437,8 +480,6 @@ def decode_wav_bytes(b: bytes) -> tuple[int, int, float, int]:
     """REAL RIFF/WAVE decode (numpy): walk the chunk list, parse the
     fmt chunk (PCM16 mono only), reinterpret the data chunk as int16,
     return (sample_rate, n_samples, rms, peak_abs)."""
-    import struct
-
     import numpy as np
 
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
@@ -461,6 +502,8 @@ def decode_wav_bytes(b: bytes) -> tuple[int, int, float, int]:
         i += 8 + size + (size % 2)  # chunks are word-aligned
     if rate is None or samples is None:
         raise ValueError("missing fmt or data chunk")
+    if len(samples) == 0:
+        raise ValueError("empty data chunk")
     sq = samples.astype(np.int64)
     rms = float(np.sqrt(float((sq * sq).sum()) / len(samples)))
     return int(rate), len(samples), rms, int(np.abs(sq).max())
@@ -470,29 +513,10 @@ def extract_image_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """mapInPandas over PPM payloads through the REAL decoder.
-    Output: <id>, width, height, mean_r, mean_g, mean_b. Undecodable
-    payloads surface as NULL feature rows (never crash the batch)."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double"
+    Output: <id>, width, height, mean_r, mean_g, mean_b."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_ppm_bytes(b)], _RGB_MEANS
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl = decode_ppm_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl))
-                except (ValueError, TypeError):
-                    rows.append((did, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def extract_audio_features(
@@ -500,26 +524,11 @@ def extract_audio_features(
 ) -> DataFrame:
     """mapInPandas over WAV payloads through the REAL decoder.
     Output: <id>, sample_rate, n_samples, rms, peak."""
-    schema = (
-        f"{id_col} long, sample_rate int, n_samples int,"
-        " rms double, peak int"
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_wav_bytes(b)],
+        [("sample_rate", "int"), ("n_samples", "int"), ("rms", "double"),
+         ("peak", "int")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rate, n, rms, peak = decode_wav_bytes(bytes(b))
-                    rows.append((did, rate, n, rms, peak))
-                except (ValueError, TypeError):
-                    rows.append((did, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_rate", "n_samples", "rms", "peak"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -580,7 +589,11 @@ def _lzw_encode(indices: list[int], min_code: int) -> bytes:
 def _lzw_decode(data: bytes, min_code: int, n_expected: int) -> list[int]:
     """GIF-flavor LZW decode: variable-width LSB-first codes, CLEAR
     resets, KwKwK (code == next free slot) handled per spec. Raises
-    ValueError on any malformed stream."""
+    ValueError on any malformed stream, including a min code size
+    outside the GIF range 2..8 (the base table has 2**min_code
+    entries, so one hostile header byte must not size it)."""
+    if not 2 <= min_code <= 8:
+        raise ValueError(f"LZW min code size {min_code} outside 2..8")
     clear = 1 << min_code
     eoi = clear + 1
     pos = 0
@@ -642,8 +655,6 @@ def synthesize_gif(seed: int, width: int = 16, height: int = 8) -> bytes:
     (seed + j·j) mod 16 — closed-form, so the oracle recomputes
     channel means without any decoder. The index stream is
     REALLY LZW-compressed (variable-width codes)."""
-    import struct
-
     n = width * height
     indices = [(seed + j * j) % 16 for j in range(n)]
     palette = bytearray()
@@ -676,8 +687,6 @@ def decode_gif_bytes(b: bytes) -> tuple[int, int, float, float, float]:
     full LZW expansion, palette mapping → (width, height, mean_r,
     mean_g, mean_b). Raises ValueError on malformed input
     (bad magic, missing tables, short/overlong LZW stream)."""
-    import struct
-
     import numpy as np
 
     if b[:6] not in (b"GIF87a", b"GIF89a"):
@@ -730,29 +739,10 @@ def extract_gif_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """mapInPandas over GIF payloads through the REAL LZW decoder.
-    Output: <id>, width, height, mean_r, mean_g, mean_b; undecodable
-    payloads become NULL feature rows."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double"
+    Output: <id>, width, height, mean_r, mean_g, mean_b."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_gif_bytes(b)], _RGB_MEANS
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl = decode_gif_bytes(bytes(payload))
-                    rows.append((did, w, h, r, g, bl))
-                except (ValueError, TypeError, IndexError):
-                    rows.append((did, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -883,8 +873,6 @@ def synthesize_jpeg(seed: int, width: int = 16, height: int = 16) -> bytes:
     quant table all ones, standard Annex K Huffman tables. Decoded
     pixels are exactly 128 + dc + ac·sx·sy with sx/sy the ±1 pattern
     of the (4,4) cosine basis (+1 at offsets {0,3,4,7})."""
-    import struct
-
     if width % 8 or height % 8:
         raise ValueError("dimensions must be multiples of 8")
     dc_tab = _huff_encode_table(_JPEG_DC_BITS, _JPEG_DC_VALS)
@@ -959,7 +947,6 @@ def decode_jpeg_bytes(b: bytes) -> tuple[int, int, float, float]:
     two, so both divisions are exact and cross-engine deterministic.
     """
     import math
-    import struct
 
     import numpy as np
 
@@ -1116,33 +1103,12 @@ def extract_jpeg_features(
 ) -> DataFrame:
     """mapInPandas over JPEG payloads through the REAL baseline
     decoder (Huffman entropy decode → dequant → IDCT). Output:
-    <id>, width, height, mean_lum, rms_dev; undecodable payloads
-    surface as NULL feature rows."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_lum double, rms_dev double"
+    <id>, width, height, mean_lum, rms_dev."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_jpeg_bytes(b)],
+        [("width", "int"), ("height", "int"), ("mean_lum", "double"),
+         ("rms_dev", "double")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, m, r = decode_jpeg_bytes(bytes(b))
-                    rows.append((did, w, h, m, r))
-                # struct.error: a truncated segment (e.g. a SOF0
-                # shorter than its unpack format) must yield the
-                # documented NULL row, not crash the Arrow batch
-                except (ValueError, TypeError, IndexError, struct.error):
-                    rows.append((did, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "mean_lum", "rms_dev"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def synthesize_bmp(seed: int, width: int = 10, height: int = 6) -> bytes:
@@ -1153,8 +1119,6 @@ def synthesize_bmp(seed: int, width: int = 10, height: int = 6) -> bytes:
     30-byte rows padded to 32), so a decoder that forgets any of the
     three classic BMP quirks produces wrong channel means against
     the closed-form oracle."""
-    import struct
-
     import numpy as np
 
     n = width * height * 3
@@ -1186,8 +1150,6 @@ def decode_bmp_bytes(
     LOGICAL top row after the flip, the one feature that is sensitive
     to row order (channel means are row-order invariant). Raises
     ValueError on malformed/unsupported input."""
-    import struct
-
     import numpy as np
 
     if len(b) < 54 or b[:2] != b"BM":
@@ -1223,34 +1185,14 @@ def decode_bmp_bytes(
 def extract_bmp_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
-    """mapInPandas over BMP payloads through the REAL decoder; same
-    contract as extract_image_features (NULL rows on undecodable
-    payloads, never a crashed batch). top_row_sum is the
-    flip-sensitive feature (channel means are row-order invariant)."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double,"
-        " top_row_sum long"
+    """mapInPandas over BMP payloads through the REAL decoder.
+    Output: <id>, width, height, mean_r, mean_g, mean_b, top_row_sum.
+    top_row_sum is the flip-sensitive feature (channel means are
+    row-order invariant)."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_bmp_bytes(b)],
+        _RGB_MEANS + [("top_row_sum", "long")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl, trs = decode_bmp_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl, trs))
-                except (ValueError, TypeError):
-                    rows.append(
-                        (did, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b", "top_row_sum"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def synthesize_tiff(seed: int, width: int = 8, height: int = 6) -> bytes:
@@ -1266,8 +1208,6 @@ def synthesize_tiff(seed: int, width: int = 8, height: int = 6) -> bytes:
     a value, walks the IFD before resolving indirection, or
     concatenates strips out of order produces wrong features against
     the closed-form generation-law oracle."""
-    import struct
-
     import numpy as np
 
     n = width * height * 3
@@ -1330,8 +1270,6 @@ def decode_tiff_bytes(
     the SECOND strip — channel means are strip-order invariant, so
     this is the feature that pins correct strip reassembly. Raises
     ValueError on malformed/unsupported input."""
-    import struct
-
     import numpy as np
 
     if len(b) < 8 or b[:2] != b"II":
@@ -1409,36 +1347,14 @@ def decode_tiff_bytes(
 def extract_tiff_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
-    """mapInPandas over TIFF payloads through the REAL decoder; NULL
-    feature rows on undecodable payloads, never a crashed batch.
+    """mapInPandas over TIFF payloads through the REAL decoder.
+    Output: <id>, width, height, mean_r, mean_g, mean_b, strip2_sum.
     strip2_sum pins strip reassembly order (means are strip-order
     invariant)."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double,"
-        " strip2_sum long"
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_tiff_bytes(b)],
+        _RGB_MEANS + [("strip2_sum", "long")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl, s2 = decode_tiff_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl, s2))
-                except (ValueError, TypeError, struct.error):
-                    rows.append(
-                        (did, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b", "strip2_sum"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def synthesize_tga(seed: int, width: int = 8, height: int = 6) -> bytes:
@@ -1453,8 +1369,6 @@ def synthesize_tga(seed: int, width: int = 8, height: int = 6) -> bytes:
     handles only one packet kind, ignores the origin bit, or forgets
     the +1 count bias produces wrong features against the
     closed-form generation-law oracle."""
-    import struct
-
     header = struct.pack(
         "<BBBHHBHHHHBB",
         0,      # id length
@@ -1496,8 +1410,6 @@ def decode_tga_bytes(
     top_row_sum) where top_row_sum is the byte sum of the LOGICAL
     top row — the flip-sensitive feature. Raises ValueError on
     malformed/unsupported input."""
-    import struct
-
     import numpy as np
 
     if len(b) < 18:
@@ -1549,33 +1461,13 @@ def decode_tga_bytes(
 def extract_tga_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
-    """mapInPandas over TGA payloads through the REAL decoder; same
-    contract as extract_bmp_features (NULL rows on undecodable
-    payloads, never a crashed batch)."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double,"
-        " top_row_sum long"
+    """mapInPandas over TGA payloads through the REAL decoder.
+    Output: <id>, width, height, mean_r, mean_g, mean_b, top_row_sum
+    (the flip-sensitive feature, as for BMP)."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_tga_bytes(b)],
+        _RGB_MEANS + [("top_row_sum", "long")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl, trs = decode_tga_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl, trs))
-                except (ValueError, TypeError):
-                    rows.append(
-                        (did, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b", "top_row_sum"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def _qoi_pixel_law(seed: int, p: int) -> tuple[int, int, int]:
@@ -1622,8 +1514,6 @@ def encode_qoi(
     """Greedy QOI encoder over an arbitrary RGB pixel list (the
     reference encoder's op preference: RUN, INDEX, DIFF, LUMA, RGB).
     Property-tested against decode_qoi_bytes on random rasters."""
-    import struct
-
     n = width * height
     if len(pixels) != n:
         raise ValueError("pixel count != width * height")
@@ -1683,8 +1573,6 @@ def decode_qoi_bytes(
     blind to pixel order, but any mis-sequenced run, stale index
     slot, or skipped chunk shifts wsum_r. Raises ValueError on
     malformed/unsupported input."""
-    import struct
-
     if len(b) < 22 or b[:4] != b"qoif":
         raise ValueError("not a QOI file")
     width, height, channels, _cs = struct.unpack_from(">IIBB", b, 4)
@@ -1755,33 +1643,13 @@ def decode_qoi_bytes(
 def extract_qoi_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
-    """mapInPandas over QOI payloads through the REAL decoder; same
-    contract as the other codec extractors (NULL rows on
-    undecodable payloads, never a crashed batch)."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double,"
-        " wsum_r long"
+    """mapInPandas over QOI payloads through the REAL decoder.
+    Output: <id>, width, height, mean_r, mean_g, mean_b, wsum_r
+    (position-weighted red sum, sensitive to pixel order)."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_qoi_bytes(b)],
+        _RGB_MEANS + [("wsum_r", "long")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl, ws = decode_qoi_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl, ws))
-                except (ValueError, TypeError, IndexError):
-                    rows.append(
-                        (did, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b", "wsum_r"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def _pcx_pixel_law(seed: int, p: int) -> tuple[int, int, int]:
@@ -1837,8 +1705,6 @@ def synthesize_pcx(seed: int, width: int = 8, height: int = 6) -> bytes:
     stream yields 4-pixel runs on rows 0-4 and 8 distinct pixels on
     row 5, so BOTH encoder paths (run packet, bare literal with the
     0xC0 escape) appear in every payload."""
-    import struct
-
     header = struct.pack(
         "<BBBB4H2H48sB B H H 58s",
         0x0A, 5, 1, 8,
@@ -1869,8 +1735,6 @@ def decode_pcx_bytes(
     position-weighted green checksum that pins scanline/plane
     SEQUENCING (means alone are order-invariant). Raises ValueError
     on malformed/unsupported input."""
-    import struct
-
     import numpy as np
 
     if len(b) < 128 or b[0] != 0x0A:
@@ -1923,33 +1787,13 @@ def decode_pcx_bytes(
 def extract_pcx_features(
     df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
-    """mapInPandas over PCX payloads through the REAL decoder; same
-    contract as extract_tga_features (NULL rows on undecodable
-    payloads, never a crashed batch)."""
-    schema = (
-        f"{id_col} long, width int, height int,"
-        " mean_r double, mean_g double, mean_b double,"
-        " wsum_g long"
+    """mapInPandas over PCX payloads through the REAL decoder.
+    Output: <id>, width, height, mean_r, mean_g, mean_b, wsum_g
+    (position-weighted green sum, sensitive to pixel order)."""
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_pcx_bytes(b)],
+        _RGB_MEANS + [("wsum_g", "long")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, r, g, bl, ws = decode_pcx_bytes(bytes(b))
-                    rows.append((did, w, h, r, g, bl, ws))
-                except (ValueError, TypeError):
-                    rows.append(
-                        (did, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height",
-                         "mean_r", "mean_g", "mean_b", "wsum_g"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1970,8 +1814,6 @@ def synthesize_au_ulaw(
     (seed*17 + j) % 256. The generation law lives on the ENCODED
     side, so the oracle must replicate the expansion formula —
     a decoder that skips the companding math cannot match."""
-    import struct
-
     import numpy as np
 
     enc = ((seed * 17 + np.arange(n_samples)) % 256).astype(np.uint8)
@@ -2002,8 +1844,6 @@ def decode_au_bytes(b: bytes) -> tuple[int, int, int, int, int]:
     payload. Returns (sample_rate, n_samples, sum_linear,
     sumsq_linear, peak_abs) — exact integers so the feature stage
     owns any float math."""
-    import struct
-
     if len(b) < 24 or b[:4] != b".snd":
         raise ValueError("not a Sun AU file")
     off, size, enc_id, rate, chans = struct.unpack(">IIIII", b[4:24])
@@ -2029,27 +1869,11 @@ def extract_ulaw_features(
     Output: <id>, sample_rate, n_samples, sum_linear, sumsq_linear,
     peak — exact integer moments (floats, if wanted, derive
     deterministically downstream)."""
-    schema = (
-        f"{id_col} long, sample_rate int, n_samples int,"
-        " sum_linear long, sumsq_linear long, peak int"
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_au_bytes(b)],
+        [("sample_rate", "int"), ("n_samples", "int"),
+         ("sum_linear", "long"), ("sumsq_linear", "long"), ("peak", "int")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rate, n, s, ss, peak = decode_au_bytes(bytes(b))
-                    rows.append((did, rate, n, s, ss, peak))
-                except (ValueError, TypeError):
-                    rows.append((did, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_rate", "n_samples",
-                         "sum_linear", "sumsq_linear", "peak"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2067,8 +1891,6 @@ def synthesize_ico(seed: int, width: int = 8, height: int = 4) -> bytes:
     """Deterministic single-image ICO: pixel k (row-major top-down)
     has B=(seed*5+4k)%256, G=+1, R=+2, A=255; AND-mask marks pixel k
     transparent when k % 7 == 0."""
-    import struct
-
     npix = width * height
     # XOR image, bottom-up rows, BGRA
     rows = []
@@ -2118,8 +1940,6 @@ def decode_ico_bytes(
     DIB, the doubled-height quirk, bottom-up XOR rows, and AND-mask
     compositing. Returns (width, height, n_opaque, n_transparent,
     sum_r, sum_g, sum_b) with sums over opaque pixels only."""
-    import struct
-
     if len(b) < 6 or struct.unpack("<HHH", b[:6]) [0:2] != (0, 1):
         raise ValueError("not an ICO file")
     count = struct.unpack("<HHH", b[:6])[2]
@@ -2173,29 +1993,12 @@ def extract_ico_features(
     """mapInPandas over ICO payloads through the REAL container
     decoder. Output: <id>, width, height, n_opaque, n_transparent,
     sum_r, sum_g, sum_b (opaque-pixel integer sums)."""
-    schema = (
-        f"{id_col} long, width int, height int, n_opaque int,"
-        " n_transparent int, sum_r long, sum_g long, sum_b long"
+    return _decode_map(
+        df, id_col, payload_col, lambda b: [decode_ico_bytes(b)],
+        [("width", "int"), ("height", "int"), ("n_opaque", "int"),
+         ("n_transparent", "int"), ("sum_r", "long"), ("sum_g", "long"),
+         ("sum_b", "long")],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, no, nt, sr, sg, sb = decode_ico_bytes(bytes(b))
-                    rows.append((did, w, h, no, nt, sr, sg, sb))
-                except (ValueError, TypeError):
-                    rows.append(
-                        (did, None, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "width", "height", "n_opaque",
-                         "n_transparent", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2214,8 +2017,6 @@ def synthesize_gif_animated(
     law as synthesize_gif; frame f's pixel j has palette index
     (seed + j·j + 7·f) mod 16. Each frame is REALLY LZW-compressed
     and preceded by a graphic-control extension block."""
-    import struct
-
     palette = bytearray()
     for i in range(16):
         palette += bytes(
@@ -2252,8 +2053,6 @@ def decode_gif_frames(
     return (width, height, n_frames, [(frame_idx, mean_r, mean_g,
     mean_b), ...]). Skipped frames still have their sub-block chain
     walked (the container must parse end-to-end)."""
-    import struct
-
     import numpy as np
 
     if b[:6] not in (b"GIF87a", b"GIF89a"):
@@ -2321,29 +2120,12 @@ def extract_gif_frame_samples(
     """mapInPandas over animated-GIF payloads: one output row per
     SAMPLED frame. Output: <id>, frame_idx, n_frames, width, height,
     mean_r, mean_g, mean_b."""
-    schema = (
-        f"{id_col} long, frame_idx int, n_frames int, width int,"
-        " height int, mean_r double, mean_g double, mean_b double"
+
+    def frames(b: bytes) -> list[tuple]:
+        w, h, nf, sampled = decode_gif_frames(b, stride)
+        return [(fi, nf, w, h, mr, mg, mb) for fi, mr, mg, mb in sampled]
+
+    return _decode_map(
+        df, id_col, payload_col, frames,
+        [("frame_idx", "int"), ("n_frames", "int")] + _RGB_MEANS,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, nf, frames = decode_gif_frames(
-                        bytes(b), stride
-                    )
-                    for fi, mr, mg, mb in frames:
-                        rows.append((did, fi, nf, w, h, mr, mg, mb))
-                except (ValueError, TypeError, IndexError):
-                    rows.append(
-                        (did, None, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "n_frames", "width",
-                         "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)

@@ -1,0 +1,178 @@
+"""One decode primitive: every codec extractor in operators/multimodal.py
+hands its per-payload decoder and output fields to ``_decode_map``, whose
+per-batch body ``_decode_batch`` is the only place a payload can turn
+into a NULL row. These tests run that body directly on pandas frames,
+so they need no Spark session."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+import pandas as pd
+import pytest
+
+from car_insurance_data_pipeline_spark_spark.operators import multimodal as mm
+
+_MODULE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "car_insurance_data_pipeline_spark_spark",
+    "operators",
+    "multimodal.py",
+)
+
+# (extractor, synthesizer) for every codec extractor
+_CODECS = [
+    (mm.extract_png_features, mm.synthesize_png),
+    (mm.extract_image_features, mm.synthesize_ppm),
+    (mm.extract_audio_features, mm.synthesize_wav),
+    (mm.extract_gif_features, mm.synthesize_gif),
+    (mm.extract_jpeg_features, mm.synthesize_jpeg),
+    (mm.extract_bmp_features, mm.synthesize_bmp),
+    (mm.extract_tiff_features, mm.synthesize_tiff),
+    (mm.extract_tga_features, mm.synthesize_tga),
+    (mm.extract_qoi_features, mm.synthesize_qoi),
+    (mm.extract_pcx_features, mm.synthesize_pcx),
+    (mm.extract_ulaw_features, mm.synthesize_au_ulaw),
+    (mm.extract_ico_features, mm.synthesize_ico),
+    (mm.extract_gif_frame_samples, mm.synthesize_gif_animated),
+]
+
+
+def _wiring(monkeypatch, extract):
+    """The (rows, fields) an extractor hands to ``_decode_map``,
+    captured without building a Spark plan."""
+    seen = {}
+
+    def record(df, id_col, payload_col, rows, fields):
+        seen.update(rows=rows, fields=fields)
+
+    monkeypatch.setattr(mm, "_decode_map", record)
+    extract(None, "doc_id", "payload")
+    return seen["rows"], seen["fields"]
+
+
+def _decode(rows, fields, payloads):
+    pdf = pd.DataFrame(
+        {"doc_id": range(len(payloads)), "payload": payloads}
+    )
+    out = mm._decode_batch(pdf, "doc_id", "payload", rows, fields)
+    assert list(out.columns) == ["doc_id"] + [n for n, _ in fields]
+    return {k: g.drop(columns="doc_id") for k, g in out.groupby("doc_id")}
+
+
+def _is_null_row(g):
+    return len(g) == 1 and g.isna().all(axis=None)
+
+
+def _bad_deflate_png():
+    """Every chunk CRC is valid, but the IDAT body is not a DEFLATE
+    stream, so inflate raises zlib.error."""
+    ihdr = bytes.fromhex("00000010" "00000008" "0802000000")
+    return (
+        mm._PNG_SIG
+        + mm._png_chunk(b"IHDR", ihdr)
+        + mm._png_chunk(b"IDAT", b"\x78\x9c not deflate")
+        + mm._png_chunk(b"IEND", b"")
+    )
+
+
+@pytest.mark.parametrize(
+    "extract, synthesize", _CODECS, ids=[e.__name__ for e, _ in _CODECS]
+)
+def test_truncated_payloads_yield_rows_or_one_null_row(
+    monkeypatch, extract, synthesize
+):
+    """Every prefix of a valid payload, plus NULL and empty payloads,
+    yields either its decoded rows or exactly one all-NULL row, and
+    the batch never raises."""
+    rows, fields = _wiring(monkeypatch, extract)
+    full = synthesize(3)
+    payloads = [full[:k] for k in range(len(full) + 1)] + [None, b""]
+    groups = _decode(rows, fields, payloads)
+    assert sorted(groups) == list(range(len(payloads)))
+    for k, g in groups.items():
+        assert _is_null_row(g) or g.notna().all(axis=None), (k, g)
+    assert not _is_null_row(groups[len(full)])
+    assert _is_null_row(groups[len(full) + 1])  # None
+    assert _is_null_row(groups[len(full) + 2])  # b""
+
+
+def test_valid_crc_bad_deflate_png_yields_null_row(monkeypatch):
+    rows, fields = _wiring(monkeypatch, mm.extract_png_features)
+    groups = _decode(rows, fields, [_bad_deflate_png(), mm.synthesize_png(3)])
+    assert _is_null_row(groups[0])
+    assert groups[1]["width"].tolist() == [16]
+
+
+def test_fan_out_failing_part_way_leaves_one_null_row():
+    """A payload whose decode fails after producing some rows keeps
+    none of them; its neighbours keep their full fan-out."""
+
+    def rows(b):
+        for i in range(len(b)):
+            if b[i] == 0:
+                raise ValueError("bad frame")
+            yield (i,)
+
+    groups = _decode(rows, [("frame_idx", "int")], [b"\1\1", b"\1\0\1"])
+    assert groups[0]["frame_idx"].tolist() == [0, 1]
+    assert _is_null_row(groups[1])
+
+
+def test_animated_gif_fan_out_is_one_row_per_sampled_frame(monkeypatch):
+    rows, fields = _wiring(monkeypatch, mm.extract_gif_frame_samples)
+    groups = _decode(rows, fields, [mm.synthesize_gif_animated(3)])
+    assert groups[0]["frame_idx"].tolist() == [0, 2, 4]
+    assert set(groups[0]["n_frames"]) == {6}
+
+
+def test_wav_empty_data_chunk_is_undecodable(monkeypatch):
+    empty = mm.synthesize_wav(3, n_samples=0)
+    with pytest.raises(ValueError, match="empty data chunk"):
+        mm.decode_wav_bytes(empty)
+    rows, fields = _wiring(monkeypatch, mm.extract_audio_features)
+    assert _is_null_row(_decode(rows, fields, [empty])[0])
+
+
+# Offset of the LZW min-code-size byte in synthesize_gif's payload:
+# 13-byte header, 16-entry palette, 10-byte image descriptor.
+_GIF_MIN_CODE_AT = 13 + 16 * 3 + 10
+
+
+@pytest.mark.parametrize("min_code", [0, 1, 9, 12])
+def test_gif_min_code_size_outside_gif_range_is_rejected(min_code):
+    with pytest.raises(ValueError, match="min code size"):
+        mm._lzw_decode(b"\x00\x00", min_code, 1)
+    gif = bytearray(mm.synthesize_gif(3))
+    assert gif[_GIF_MIN_CODE_AT] == 4
+    gif[_GIF_MIN_CODE_AT] = min_code
+    with pytest.raises(ValueError, match="min code size"):
+        mm.decode_gif_bytes(bytes(gif))
+
+
+def test_one_decode_wrapper_and_one_error_policy():
+    """``.mapInPandas(`` is called only by ``_decode_map`` and the
+    batch-level ``extract_features`` seam; no ``extract_*`` function
+    holds its own ``try``; the module's only exception handler is the
+    primitive's, and it catches ``_UNDECODABLE``."""
+    with open(_MODULE, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), filename=_MODULE)
+    callers, tries, handlers = set(), [], []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"
+            ):
+                callers.add(fn.name)
+            if isinstance(node, ast.Try) and fn.name.startswith("extract_"):
+                tries.append(fn.name)
+            if isinstance(node, ast.ExceptHandler):
+                handlers.append((fn.name, ast.unparse(node.type)))
+    assert callers == {"_decode_map", "extract_features"}
+    assert tries == []
+    assert handlers == [("_decode_batch", "_UNDECODABLE")]
