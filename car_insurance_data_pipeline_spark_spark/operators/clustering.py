@@ -35,7 +35,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from car_insurance_data_pipeline_spark_spark.session import checkpoint
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+)
 
 # kmeans_fit_predict's driver-route ceiling: an ABSOLUTE vector count
 # (never derived from host parallelism), measured in its docstring.
@@ -211,7 +214,7 @@ def _kmeans_driver(
             StructField("cluster", IntegerType(), False),
         ]
     )
-    return spark.createDataFrame(out_pdf, schema)
+    return driver_frame(spark, out_pdf, schema)
 
 
 def kmeans_fit_predict(

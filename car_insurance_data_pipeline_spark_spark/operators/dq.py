@@ -13,6 +13,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from car_insurance_data_pipeline_spark_spark.session import driver_frame
+
 
 @dataclass
 class ValidationRules:
@@ -84,7 +86,8 @@ def validate(df: DataFrame, rules: ValidationRules) -> DataFrame:
         out.append(("min", c, row[f"__min__{c}"], status))
         out.append(("max", c, row[f"__max__{c}"], status))
         out.append(("avg", c, (s / n) if (n and s is not None) else None, status))
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         out, "check string, metric string, value double, status string"
     )
 
@@ -144,7 +147,8 @@ def observation_report(
     for c in rules.positive:
         v = metrics[f"__neg__{c}"]
         out.append(("non_negative", c, v, "OK" if v == 0 else "WARN"))
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         out, "check string, metric string, value double, status string"
     )
 

@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from car_insurance_data_pipeline_spark_spark.session import checkpoint, release
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+    release,
+)
 
 # Small-graph driver routes: at or below these ABSOLUTE edge counts
 # the iterative ops collect the graph and run driver-side instead of
@@ -177,7 +181,8 @@ def connected_components(
         node_type = e.schema["u"].dataType
         from pyspark.sql.types import StructField, StructType
 
-        lab = edges.sparkSession.createDataFrame(
+        lab = driver_frame(
+            edges.sparkSession,
             [(n, find(n)) for n in sorted(nodes)],
             StructType(
                 [
@@ -238,7 +243,7 @@ def _pagerank_driver(spark, e: DataFrame, damping: float, n_iter: int):
     )
     rows = e.collect()
     if not rows:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
     nodes = sorted({r.s for r in rows} | {r.t for r in rows})
     idx = {u: i for i, u in enumerate(nodes)}
     n = len(nodes)
@@ -254,7 +259,8 @@ def _pagerank_driver(spark, e: DataFrame, damping: float, n_iter: int):
         np.add.at(contrib, dst_i, r[src_i] / deg[src_i])
         dangling = float(r[no_out].sum())
         r = (1.0 - damping) / n + damping * (contrib + dangling / n)
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         [(nodes[i], float(r[i])) for i in range(n)], schema
     )
 
@@ -400,7 +406,7 @@ def _hits_driver(spark, e: DataFrame, n_iter: int) -> DataFrame:
     )
     pdf = e.toPandas()
     if pdf.empty:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
     c_codes, c_nodes = pd.factorize(pdf["c"])
     p_codes, p_nodes = pd.factorize(pdf["p"])
     nc, npt = len(c_nodes), len(p_nodes)
@@ -418,7 +424,7 @@ def _hits_driver(spark, e: DataFrame, n_iter: int) -> DataFrame:
             "score": np.concatenate([h, a]),
         }
     )
-    return spark.createDataFrame(out, schema)
+    return driver_frame(spark, out, schema)
 
 
 def hits(
@@ -510,7 +516,8 @@ def _label_propagation_driver(
             best = min(c.items(), key=lambda kv: (-kv[1], kv[0]))[0]
             nxt[n] = best
         labels = nxt
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         sorted(labels.items()), "node long, label long"
     )
 
@@ -630,7 +637,7 @@ def _bfs_driver(
             if y not in dist:
                 dist[y] = dist[x] + 1
                 dq.append(y)
-    return spark.createDataFrame(sorted(dist.items()), schema)
+    return driver_frame(spark, sorted(dist.items()), schema)
 
 
 def bfs_distances(
@@ -758,7 +765,8 @@ def _kcore_driver(spark, e: DataFrame, k: int, rounds: int) -> DataFrame:
             break
         u, v = u[mask], v[mask]
     vals, cnts = np.unique(u, return_counts=True)
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         list(zip(vals.tolist(), (int(c) for c in cnts))), schema
     )
 

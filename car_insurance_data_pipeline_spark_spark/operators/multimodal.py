@@ -33,6 +33,7 @@ stdlib-implementable at reasonable size. The ``decoder`` seam in
 from __future__ import annotations
 
 import struct
+import sys
 import zlib
 from collections.abc import Callable, Iterator
 
@@ -307,10 +308,17 @@ def decode_png_bytes(b: bytes) -> tuple[int, int, float, float, float]:
         i += 12 + clen
     if width is None or not idat:
         raise ValueError("missing IHDR or IDAT")
-    plain = zlib.decompress(bytes(idat))
     bpp = 3
     stride = width * bpp
-    if len(plain) != height * (stride + 1):
+    expected = height * (stride + 1)
+    # inflate at most one byte past what IHDR promises, so a small
+    # payload cannot allocate a large buffer; an unfinished stream
+    # (no end-of-stream marker) is as malformed as a short one
+    inflater = zlib.decompressobj()
+    plain = inflater.decompress(
+        bytes(idat), max_length=min(expected + 1, sys.maxsize)
+    )
+    if len(plain) != expected or not inflater.eof:
         raise ValueError("pixel data length mismatch")
     recon = np.zeros((height, stride), dtype=np.int64)
     prior = np.zeros(stride, dtype=np.int64)
@@ -2044,6 +2052,11 @@ def synthesize_gif_animated(
     return bytes(out)
 
 
+def _check_stride(stride: int) -> None:
+    if stride < 1:
+        raise ValueError(f"frame stride must be >= 1, got {stride}")
+
+
 def decode_gif_frames(
     b: bytes, stride: int = 2
 ) -> tuple[int, int, int, list]:
@@ -2052,9 +2065,11 @@ def decode_gif_frames(
     sub-blocks), fully decode ONLY frames at the given stride, and
     return (width, height, n_frames, [(frame_idx, mean_r, mean_g,
     mean_b), ...]). Skipped frames still have their sub-block chain
-    walked (the container must parse end-to-end)."""
+    walked (the container must parse end-to-end). Raises ValueError
+    for ``stride < 1``."""
     import numpy as np
 
+    _check_stride(stride)
     if b[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     if len(b) < 13:
@@ -2119,7 +2134,9 @@ def extract_gif_frame_samples(
 ) -> DataFrame:
     """mapInPandas over animated-GIF payloads: one output row per
     SAMPLED frame. Output: <id>, frame_idx, n_frames, width, height,
-    mean_r, mean_g, mean_b."""
+    mean_r, mean_g, mean_b. Raises ValueError for ``stride < 1`` when
+    called, not per payload in the executor."""
+    _check_stride(stride)
 
     def frames(b: bytes) -> list[tuple]:
         w, h, nf, sampled = decode_gif_frames(b, stride)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.functions.vectors import cosine
+from car_insurance_data_pipeline_spark_spark.session import driver_frame
 
 
 def _ranked_topk(sims: DataFrame, k: int) -> DataFrame:
@@ -260,7 +261,7 @@ def embedding_dup_pairs(
     pair_rows = [
         (a, b) for a in range(n_blocks) for b in range(a, n_blocks)
     ]
-    pairs = spark.createDataFrame(pair_rows, "ba int, bb int")
+    pairs = driver_frame(spark, pair_rows, "ba int, bb int")
     # Replicate each row into every block pair where its block is side
     # a (tag 0) or side b (tag 1); diagonal pairs keep one copy.
     side_a = blocks.join(

@@ -32,7 +32,10 @@ from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
 from car_insurance_data_pipeline_spark_spark.plans.relational import (
     events_with_us,
 )
-from car_insurance_data_pipeline_spark_spark.session import checkpoint
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+)
 
 # ---------------------------------------------------------------------------
 # q162 gaps-and-islands: consecutive-day order streaks
@@ -1638,7 +1641,7 @@ def q319_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("l1_delta_micro", LongType()),
         ]
     )
-    return ev.sparkSession.createDataFrame(out, schema)
+    return driver_frame(ev.sparkSession, out, schema)
 
 
 @query(
@@ -1747,7 +1750,8 @@ def q320_shapley_attribution(
         )
         .transform(checkpoint)
     )
-    ch = spark.createDataFrame(
+    ch = driver_frame(
+        spark,
         [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
         "channel string, bit long",
     )

@@ -38,7 +38,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
-from car_insurance_data_pipeline_spark_spark.session import checkpoint
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+)
 
 
 @query(
@@ -2516,7 +2519,8 @@ def q322_rank_biased_overlap(
     matches = a.join(b, "l_partkey").select(
         F.greatest("ra", "rb").alias("dmin")
     )
-    depths = spark.createDataFrame(
+    depths = driver_frame(
+        spark,
         [
             (1, 1, 10),
             (2, 9, 200),

@@ -35,7 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
-from car_insurance_data_pipeline_spark_spark.session import checkpoint
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+)
 
 _VARIANT = (
     "CASE WHEN substring(md5(CAST(user_id AS VARCHAR)), 1, 1) <= '7'"
@@ -1241,7 +1244,8 @@ def q229_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_risk = int(r["n_total"]) - int(r["removed_before"])
         s = (s * (n_risk - int(r["d"]))) // n_risk
         out.append((int(r["dur"]), n_risk, int(r["d"]), int(r["c"]), s))
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         out,
         "dur_days bigint, n_risk bigint, d_events bigint,"
         " c_censored bigint, s_ppm bigint",
@@ -2384,7 +2388,7 @@ def q278_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return driver_frame(spark, rows, schema)
 
 
 @query(

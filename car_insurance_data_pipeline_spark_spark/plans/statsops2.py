@@ -21,7 +21,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.plans.catalog import query, table
-from car_insurance_data_pipeline_spark_spark.session import checkpoint
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+)
 
 
 def _signed_ppm_div(num: str, den: str, scale: int = 1_000_000) -> str:
@@ -1078,7 +1081,7 @@ def q338_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("ses_c", LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return driver_frame(spark, rows, schema)
 
 
 # --------------------------------------------------------------------------
@@ -2446,7 +2449,7 @@ def q355_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("rnk", LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return driver_frame(spark, rows, schema)
 
 
 # --------------------------------------------------------------------------
@@ -2688,7 +2691,7 @@ def q357_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("lockstep_l1_cents", LongType()),
         ]
     )
-    return spark.createDataFrame([(na, nb, prev[nb], l1)], schema)
+    return driver_frame(spark, [(na, nb, prev[nb], l1)], schema)
 
 
 # --------------------------------------------------------------------------

@@ -110,12 +110,17 @@ def q41_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic-dedup operator. Brute-force form doubles as the oracle;
     the LSH-bucketed form is the scale path (same machinery as q39).
 
-    n_blocks sizes to the corpus: each applyInPandas group costs a
-    fixed Arrow/worker setup (~0.15 s), so at fixture scale (≤20k
-    vectors) C(5,2)=10 groups beat 36 (measured 4× at sf0.1); at
+    n_blocks sizes to the corpus. An extra applyInPandas group costs
+    little, because groups share the stage's tasks and so its Python
+    workers: re-measured at sf0.1 on a 4-CPU host (median of 5),
+    10 groups take 0.70 s and 36 take 0.80 s, about 4 ms per extra
+    group. The ~0.15 s per group once quoted here was mostly the
+    block-pair table being read as a pickled Python RDD by every job
+    that joined it; built through ``session.driver_frame`` it is a
+    JVM LocalRelation, and the query fell from 1.15 s to 0.70 s. At
     100 TB you raise n_blocks until one block (~N/n_blocks · dim · 8
-    bytes) fits executor memory — group count grows as n_blocks²/2
-    and amortizes the fixed cost.
+    bytes) fits executor memory; the group count grows as
+    n_blocks²/2.
     """
     emb = table(spark, sf_dir, "embeddings")
     return embedding_dup_pairs(

@@ -18,6 +18,8 @@ any session timezone when the host is UTC.
 Every lineage cut in the engine goes through ``checkpoint`` below, and
 every early release of a checkpoint's storage through ``release`` /
 ``release_all``, so the durability policy lives in this one module.
+Every frame built from driver-side rows goes through ``driver_frame``,
+so no driver result reaches the JVM as a pickled Python RDD.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_session(
@@ -71,6 +74,48 @@ def get_session(
 def stop_session(spark: SparkSession) -> None:
     """Teardown (reference: scripts/11_cleanup_spark_session.py:25-41)."""
     spark.stop()
+
+
+def driver_frame(
+    spark: SparkSession, data, schema: StructType | str
+) -> DataFrame:
+    """Hand rows built on the driver to the JVM as one Arrow table.
+
+    ``spark.createDataFrame(<list>, schema)`` ships its rows as a
+    pickled Python RDD (``applySchemaToPythonRDD``): every job that
+    reads the frame starts Python workers just to unpickle a few rows,
+    and a frame read by several joins pays that per read. An Arrow
+    table is decoded in the JVM (a ``LocalRelation`` at driver-result
+    sizes), so reading the frame starts no Python worker. There is one
+    path: no conf or fallback routes a frame through the Python RDD.
+
+    ``data`` is a list of tuples or a pandas DataFrame; ``schema`` a
+    DDL string or ``StructType``. The frame's schema is exactly
+    ``schema`` (names, types, nullability), empty input gives an
+    empty frame, and a NULL in a non-nullable field raises
+    ``ValueError``. In tuples a float NaN stays NaN and ``None`` is
+    NULL; in a pandas frame NaN in a float column is NULL, as in
+    Spark's own pandas conversion.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data, schema=arrow, preserve_index=False)
+    else:
+        cols = list(zip(*data)) if data else [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        )
+    for f, col in zip(arrow, table.columns):
+        if not f.nullable and col.null_count:
+            raise ValueError(f"NULL in non-nullable field {f.name!r}")
+    return spark.createDataFrame(table, schema)
 
 
 def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:

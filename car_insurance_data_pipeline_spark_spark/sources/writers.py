@@ -11,7 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from car_insurance_data_pipeline_spark_spark.session import checkpoint
+from car_insurance_data_pipeline_spark_spark.session import (
+    checkpoint,
+    driver_frame,
+)
 
 
 def export_manifest(
@@ -454,7 +457,8 @@ def write_sharded_resumable(
             for s in todo:
                 _write_marker(spark, path, s, int(counts.get(s, 0)))
     final = completed_shards(spark, path)
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         sorted((s, n) for s, n in final.items()), "shard int, n_rows bigint"
     )
 
@@ -559,7 +563,8 @@ def merge_into_sharded(
         )
         _finish_merge(spark, path)
     final = completed_shards(spark, path)
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         sorted((s, n) for s, n in final.items()), "shard int, n_rows bigint"
     )
 
@@ -709,7 +714,8 @@ def audit_sharded(spark, path: str) -> DataFrame:
         else:
             status = "mismatch"
         rows.append((s, m, a, status, pending))
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         rows,
         "shard int, marked_rows bigint, actual_rows bigint, "
         "status string, merge_pending boolean",

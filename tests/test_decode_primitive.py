@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import ast
 import os
+import tracemalloc
+import zlib
 
 import pandas as pd
 import pytest
@@ -98,11 +100,64 @@ def test_truncated_payloads_yield_rows_or_one_null_row(
     assert _is_null_row(groups[len(full) + 2])  # b""
 
 
+def _unfinished_deflate_png():
+    """Valid CRCs and all 392 pixel bytes, but the DEFLATE stream
+    stops before its checksum."""
+    ihdr = bytes.fromhex("00000010" "00000008" "0802000000")
+    return (
+        mm._PNG_SIG
+        + mm._png_chunk(b"IHDR", ihdr)
+        + mm._png_chunk(b"IDAT", zlib.compress(bytes(8 * 49))[:-4])
+        + mm._png_chunk(b"IEND", b"")
+    )
+
+
 def test_valid_crc_bad_deflate_png_yields_null_row(monkeypatch):
     rows, fields = _wiring(monkeypatch, mm.extract_png_features)
-    groups = _decode(rows, fields, [_bad_deflate_png(), mm.synthesize_png(3)])
-    assert _is_null_row(groups[0])
-    assert groups[1]["width"].tolist() == [16]
+    groups = _decode(
+        rows,
+        fields,
+        [_bad_deflate_png(), _unfinished_deflate_png(), mm.synthesize_png(3)],
+    )
+    assert _is_null_row(groups[0]) and _is_null_row(groups[1])
+    assert groups[2]["width"].tolist() == [16]
+
+
+def _png_bomb(inflated: int = 200 * 1024 * 1024, size="00000010" "00000008"):
+    """A PNG (16x8 by default: 392 pixel bytes by IHDR) whose valid
+    IDAT inflates to ``inflated`` zero bytes: about 194 KB on the wire
+    at the default."""
+    deflate = zlib.compressobj(9)
+    chunk = bytes(min(inflated, 1 << 20))
+    idat = b"".join(
+        deflate.compress(chunk) for _ in range(inflated // len(chunk))
+    ) + deflate.flush()
+    ihdr = bytes.fromhex(size + "0802000000")
+    return (
+        mm._PNG_SIG
+        + mm._png_chunk(b"IHDR", ihdr)
+        + mm._png_chunk(b"IDAT", idat)
+        + mm._png_chunk(b"IEND", b"")
+    )
+
+
+def test_png_inflate_is_bounded_by_ihdr(monkeypatch):
+    """A payload that inflates far past its IHDR size is a NULL row,
+    and decoding it never holds more than IHDR's size plus one byte
+    of inflated data. IHDR's largest dimensions (a size no buffer
+    limit can express) are a NULL row too."""
+    bomb = _png_bomb()
+    assert len(bomb) < 256 * 1024
+    huge = _png_bomb(392, size="ffffffff" "ffffffff")
+    rows, fields = _wiring(monkeypatch, mm.extract_png_features)
+    tracemalloc.start()
+    try:
+        groups = _decode(rows, fields, [bomb, huge])
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert _is_null_row(groups[0]) and _is_null_row(groups[1])
+    assert peak < 16 * 1024 * 1024, peak
 
 
 def test_fan_out_failing_part_way_leaves_one_null_row():
@@ -125,6 +180,16 @@ def test_animated_gif_fan_out_is_one_row_per_sampled_frame(monkeypatch):
     groups = _decode(rows, fields, [mm.synthesize_gif_animated(3)])
     assert groups[0]["frame_idx"].tolist() == [0, 2, 4]
     assert set(groups[0]["n_frames"]) == {6}
+
+
+@pytest.mark.parametrize("stride", [0, -1])
+def test_gif_frame_stride_below_one_is_rejected_by_the_caller(stride):
+    """Checked when called, not per payload: 0 used to divide by zero
+    in every executor task, and -1 silently sampled every frame."""
+    with pytest.raises(ValueError, match="stride"):
+        mm.decode_gif_frames(mm.synthesize_gif_animated(1), stride)
+    with pytest.raises(ValueError, match="stride"):
+        mm.extract_gif_frame_samples(None, "doc_id", "payload", stride)
 
 
 def test_wav_empty_data_chunk_is_undecodable(monkeypatch):

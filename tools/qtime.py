@@ -14,7 +14,12 @@ BENCH_DETAIL.json; ``--noop`` additionally times a
 column) and print min/median.  With --explain-dir, write
 ``<dir>/<query><suffix>.txt`` containing ``explain("formatted")``.
 
-Prints one JSON line per query and a final summary line.
+Prints one JSON line per query and a final summary line. Each query's
+line also carries ``cpu_median_s``: the median over reps of the CPU
+seconds the process tree spent in the timed region, split into the
+driver (this process), the JVM (the gateway and any launcher shell)
+and the Python workers (the worker daemon and the workers it forked),
+read from ``/proc`` for this process and its descendants only.
 """
 
 from __future__ import annotations
@@ -29,6 +34,40 @@ import time
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+
+_CLOCK_TICKS = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_split() -> dict[str, float]:
+    """CPU seconds used so far by this process and its descendants,
+    per role. Each process counts its own and its reaped children's
+    time, so workers the daemon already reaped stay counted."""
+    parent, comm, ticks = {}, {}, {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                stat = f.read()
+        except OSError:  # the process exited while we scanned
+            continue
+        pid, close = int(entry), stat.rindex(")")
+        fields = stat[close + 2 :].split()
+        parent[pid] = int(fields[1])
+        comm[pid] = stat[stat.index("(") + 1 : close]
+        ticks[pid] = sum(int(x) for x in fields[11:15])
+    me = os.getpid()
+    out = {"driver": ticks.get(me, 0), "jvm": 0, "python_workers": 0}
+    tree, frontier = {me}, [me]
+    while frontier:
+        kids = [p for p, pp in parent.items() if pp in frontier and p not in tree]
+        for p in kids:
+            role = "python_workers" if comm[p].startswith("python") else "jvm"
+            out[role] += ticks[p]
+        tree.update(kids)
+        frontier = kids
+    return {k: v / _CLOCK_TICKS for k, v in out.items()}
 
 
 def main() -> None:
@@ -57,12 +96,15 @@ def main() -> None:
 
     results = {}
     for name in args.queries:
-        samples, noop_samples = [], []
+        samples, noop_samples, cpu = [], [], []
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(f"qtime:{name}")
+            c0 = tree_cpu_split()
             t0 = time.perf_counter()
             qs[name](spark, args.sf).count()
             samples.append(time.perf_counter() - t0)
+            c1 = tree_cpu_split()
+            cpu.append({k: c1[k] - c0[k] for k in c1})
             release_all(spark)
             if args.noop:
                 t0 = time.perf_counter()
@@ -78,6 +120,10 @@ def main() -> None:
             "median": round(statistics.median(samples), 3),
             "reps": args.reps,
             "sf": args.sf,
+            "cpu_median_s": {
+                k: round(statistics.median(c[k] for c in cpu), 3)
+                for k in cpu[0]
+            },
         }
         if noop_samples:
             row["noop_min"] = round(min(noop_samples), 3)
