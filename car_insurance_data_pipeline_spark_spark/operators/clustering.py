@@ -35,6 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from car_insurance_data_pipeline_spark_spark.operators.similarity import (
+    _vec_matrix,
+)
 from car_insurance_data_pipeline_spark_spark.session import (
     checkpoint,
     driver_frame,
@@ -58,7 +61,10 @@ def _assign(
     engines' distance summation orders differ in the last ulp, which
     can flip an argmin only on a measure-zero exact distance tie —
     the q113 argument; centroid EXACTNESS is never at stake here
-    (sums stay JVM-decimal)."""
+    (sums stay JVM-decimal). Distances are raw Euclidean, not
+    cosine: a zero vector is the origin, a point like any other, so
+    the similarity family's zero-vector rule does not apply and the
+    matrix is built unnormalized."""
     cmat = np.asarray(centroids, dtype=np.float64)  # (k, dim)
     vec_type = v.schema[vec_col].dataType.simpleString()
 
@@ -66,9 +72,7 @@ def _assign(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.vstack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
+            m, _ = _vec_matrix(pdf[vec_col])
             # full |x-c|^2 per pair (not the |x|^2-2xc expansion: the
             # subtraction-first form is what the oracle folds)
             d = ((m[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
@@ -150,7 +154,7 @@ def _kmeans_driver(
 
     pdf = v.toPandas()
     ids = pdf[id_col].to_numpy()
-    m = np.vstack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+    m, _ = _vec_matrix(pdf[vec_col])
     order = np.argsort(ids, kind="stable")
     ids, m = ids[order], m[order]
     kk = min(k, m.shape[0])

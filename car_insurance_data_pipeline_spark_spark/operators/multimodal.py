@@ -33,7 +33,6 @@ stdlib-implementable at reasonable size. The ``decoder`` seam in
 from __future__ import annotations
 
 import struct
-import sys
 import zlib
 from collections.abc import Callable, Iterator
 
@@ -136,6 +135,25 @@ def extract_features(
 # (MemoryError, a ZeroDivisionError) is a decoder fault and fails
 # the batch loudly.
 _UNDECODABLE = (ValueError, TypeError, IndexError, struct.error, zlib.error)
+
+# Largest raster an image decoder accepts. The decoders hold the whole
+# raster in the Python worker: tracemalloc peaks run from 25 bytes
+# per pixel (PPM, BMP) to 81 (QOI with every pixel distinct), so
+# 1 << 20 pixels (1024 x 1024) bound one payload's peak to ~85 MB.
+MAX_PIXELS = 1 << 20
+
+
+def _check_dims(width: int, height: int) -> None:
+    """Every image decoder's size check, made on the header's
+    dimensions before any raster-sized allocation: both at least 1
+    and at most MAX_PIXELS pixels in all. A ValueError, so
+    ``_decode_batch`` turns a degenerate or hostile size into a NULL
+    row."""
+    if width < 1 or height < 1 or width * height > MAX_PIXELS:
+        raise ValueError(
+            f"image size {width}x{height} is outside 1..{MAX_PIXELS} pixels"
+        )
+
 
 _RGB_MEANS = [
     ("width", "int"),
@@ -308,6 +326,7 @@ def decode_png_bytes(b: bytes) -> tuple[int, int, float, float, float]:
         i += 12 + clen
     if width is None or not idat:
         raise ValueError("missing IHDR or IDAT")
+    _check_dims(width, height)
     bpp = 3
     stride = width * bpp
     expected = height * (stride + 1)
@@ -315,9 +334,7 @@ def decode_png_bytes(b: bytes) -> tuple[int, int, float, float, float]:
     # payload cannot allocate a large buffer; an unfinished stream
     # (no end-of-stream marker) is as malformed as a short one
     inflater = zlib.decompressobj()
-    plain = inflater.decompress(
-        bytes(idat), max_length=min(expected + 1, sys.maxsize)
-    )
+    plain = inflater.decompress(bytes(idat), max_length=expected + 1)
     if len(plain) != expected or not inflater.eof:
         raise ValueError("pixel data length mismatch")
     recon = np.zeros((height, stride), dtype=np.int64)
@@ -445,6 +462,7 @@ def decode_ppm_bytes(b: bytes) -> tuple[int, int, float, float, float]:
     w, h, maxval = tokens
     if maxval != 255:
         raise ValueError("only 8-bit PPM supported")
+    _check_dims(w, h)
     arr = np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=i)
     arr = arr.reshape(h, w, 3)
     means = arr.astype(np.int64).sum(axis=(0, 1)) / float(w * h)
@@ -723,6 +741,7 @@ def decode_gif_bytes(b: bytes) -> tuple[int, int, float, float, float]:
     _l, _t, w, h, ipacked = struct.unpack("<HHHHB", b[i + 1 : i + 10])
     if ipacked & 0xC0:
         raise ValueError("local color table / interlace unsupported")
+    _check_dims(w, h)
     i += 10
     min_code = b[i]
     i += 1
@@ -1010,6 +1029,7 @@ def decode_jpeg_bytes(b: bytes) -> tuple[int, int, float, float]:
         i += 2 + ln
     if width is None or scan_start is None:
         raise ValueError("missing SOF0 or SOS")
+    _check_dims(width, height)
     if comp_tq not in qtabs or (0, 0) not in htabs or (1, 0) not in htabs:
         raise ValueError("missing quant or Huffman tables")
     # destuff entropy data up to EOI
@@ -1170,6 +1190,7 @@ def decode_bmp_bytes(
         raise ValueError("only uncompressed 24-bit BITMAPINFOHEADER BMPs")
     bottom_up = height > 0
     h = abs(height)
+    _check_dims(width, h)
     row_bytes = width * 3
     stride = row_bytes + ((-row_bytes) % 4)
     data = np.frombuffer(
@@ -1315,6 +1336,7 @@ def decode_tiff_bytes(
         return tags[tag][0]
 
     width, height = one(256), one(257)
+    _check_dims(width, height)
     if one(259) != 1 or one(262) != 2 or one(277) != 3:
         raise ValueError("only uncompressed 8-bit RGB TIFFs")
     if tags.get(258) != [8, 8, 8]:
@@ -1428,6 +1450,7 @@ def decode_tga_bytes(
     )
     if cmap_type != 0 or img_type != 10 or depth != 24:
         raise ValueError("only RLE true-color 24-bit TGA")
+    _check_dims(width, height)
     pos = 18 + id_len
     n_px = width * height
     out = bytearray()
@@ -1586,6 +1609,7 @@ def decode_qoi_bytes(
     width, height, channels, _cs = struct.unpack_from(">IIBB", b, 4)
     if channels not in (3, 4):
         raise ValueError("bad channel count")
+    _check_dims(width, height)
     n = width * height
     pos = 14
     index = [(0, 0, 0, 255)] * 64
@@ -1756,6 +1780,7 @@ def decode_pcx_bytes(
         raise ValueError("only v5 RLE 24-bit PCX")
     width = xmax - xmin + 1
     height = ymax - ymin + 1
+    _check_dims(width, height)
     total = bpl * nplanes * height
     out = bytearray()
     pos = 128
@@ -1968,6 +1993,7 @@ def decode_ico_bytes(
     if bisize != 40 or comp != 0 or bpp != 32:
         raise ValueError("only uncompressed 32bpp DIB supported")
     height = dheight // 2
+    _check_dims(width, height)
     if w8 != width % 256 or h8 != height % 256:
         raise ValueError("directory/DIB dimension mismatch")
     xor_len = width * height * 4
@@ -2075,6 +2101,7 @@ def decode_gif_frames(
     if len(b) < 13:
         raise ValueError("truncated GIF header")
     sw, sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
+    _check_dims(sw, sh)
     if not packed & 0x80:
         raise ValueError("no global color table")
     gct_n = 2 << (packed & 0x07)
@@ -2101,6 +2128,7 @@ def decode_gif_frames(
         )
         if ipacked & 0xC0:
             raise ValueError("local color table / interlace unsupported")
+        _check_dims(w, h)
         i += 10
         min_code = b[i]
         i += 1

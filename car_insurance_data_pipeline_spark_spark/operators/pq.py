@@ -32,6 +32,10 @@ Scale notes:
 - Determinism: seeded init, argmin lowest-index tie-breaks, sims
   rounded to 5 decimals before the (sim desc, cid) ranking — the
   shared _ranked_topk contract.
+- Zero vectors: a zero query's sims are NULL, the similarity
+  family's rule. A corpus code cannot record that its vector was
+  zero: a zero vector normalizes to a NaN row, which encodes as
+  centroid 0 in every subspace and then scores like any code 0.
 """
 
 from __future__ import annotations
@@ -43,11 +47,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from car_insurance_data_pipeline_spark_spark.operators.similarity import _ranked_topk
-
-
-def _normalize(x: np.ndarray) -> np.ndarray:
-    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+from car_insurance_data_pipeline_spark_spark.operators.similarity import (
+    _batch_topk,
+    _ranked_topk,
+    _vec_matrix,
+)
 
 
 def train_pq_codebooks(
@@ -66,11 +70,13 @@ def train_pq_codebooks(
     products of reconstructed subvectors approximate cosine. Each
     subspace trains independently (that independence is what makes
     the implicit codebook size k_sub**m while storing only m·k_sub
-    centroids). Empty cells keep their previous centroid — same
-    policy as the IVF trainers.
+    centroids). Empty cells keep their previous centroid and zero
+    vectors are dropped from the sample — same policies as the IVF
+    trainers.
     """
     rows = df.select(vec_col).limit(sample).collect()
-    x = _normalize(np.vstack([np.asarray(r[0], dtype=np.float64) for r in rows]))
+    x, zero = _vec_matrix([r[0] for r in rows], normalize=True)
+    x = x[~zero]
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -122,11 +128,7 @@ def pq_encode(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = _normalize(
-                np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-            )
+            x, _ = _vec_matrix(pdf[vec_col], normalize=True)
             codes = np.empty((len(x), m), dtype=np.int32)
             for j in range(m):
                 sub = x[:, j * d_sub : (j + 1) * d_sub]
@@ -176,9 +178,7 @@ def pq_cosine_topk(
 
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows])
-    qmat = _normalize(
-        np.vstack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    )
+    qmat, _ = _vec_matrix([r[1] for r in qrows], normalize=True)
     mm, _, d_sub = books.shape
     # LUT[i, j, c] = q_i's j-th subvector · centroid c of subspace j
     lut = np.stack(
@@ -196,27 +196,13 @@ def pq_cosine_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            codes_mat = np.vstack(pdf["code"].to_numpy())  # (n, m)
-            cids = pdf["cid"].to_numpy()
+            codes_mat = _vec_matrix(pdf["code"])[0].astype(np.intp)  # (n, m)
             # sims[i, q] = sum_j LUT[q, j, codes[i, j]]
-            sims = np.zeros((len(cids), nq))
+            sims = np.zeros((len(codes_mat), nq))
             for j in range(codes_mat.shape[1]):
                 sims += b_lut[:, j, codes_mat[:, j]].T
             sims = np.round(sims, 5)
-            kk = min(k + 1, len(cids))
-            frames = []
-            for qi, qid in enumerate(b_qids):
-                order = np.lexsort((cids, -sims[:, qi]))[:kk]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qid,
-                            "cid": cids[order],
-                            "sim": sims[order, qi],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            yield _batch_topk(sims, pdf["cid"].to_numpy(), b_qids, k)
 
     sims = codes.mapInPandas(score, "qid long, cid long, sim double")
     sims = sims.filter(F.col("cid") != F.col("qid"))

@@ -14,7 +14,13 @@
 
 For very wide vectors where per-element expression evaluation
 dominates, ``cosine_topk_pandas`` is the Arrow-vectorized variant
-(numpy matmul per batch) — same results, Pandas-UDF path.
+(numpy matmul per batch) — same rows, Pandas-UDF path.
+
+Every numpy kernel builds its matrices with ``_vec_matrix`` and cuts
+per-batch top-k with ``_batch_topk``. One zero-vector rule holds on
+every route: a zero vector has no direction, so its similarity is
+NULL (NaN in numpy), ranks last and meets no threshold — what the JVM
+``cosine()`` and the DuckDB oracles give.
 """
 
 from __future__ import annotations
@@ -29,6 +35,51 @@ from pyspark.sql.window import Window
 
 from car_insurance_data_pipeline_spark_spark.functions.vectors import cosine
 from car_insurance_data_pipeline_spark_spark.session import driver_frame
+
+
+def _vec_matrix(
+    values, normalize: bool = False
+) -> tuple[np.ndarray, np.ndarray]:
+    """A batch of vectors (a pandas column or a list of array-likes)
+    as one float64 (n, dim) matrix, plus the (n,) mask of its
+    zero-norm rows.
+
+    ``normalize=True`` scales each row to unit length and applies the
+    zero-vector rule: a zero row becomes NaN, so every dot product it
+    enters is NaN, which Arrow hands to Spark as NULL. Sites that need
+    a point rather than a direction drop the masked rows (the
+    centroid trainers) or say in their docstring what a NaN row does
+    there."""
+    m = np.vstack(list(values), dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1)
+    zero = norms == 0
+    if normalize:
+        m /= np.where(zero, 1.0, norms)[:, None]
+        m[zero] = np.nan
+    return m, zero
+
+
+def _batch_topk(
+    sims: np.ndarray, cids: np.ndarray, qids: np.ndarray, k: int
+) -> pd.DataFrame:
+    """The per-batch cut before the global ``_ranked_topk`` merge
+    (REPOSE's local top-k pruning): for each query column j of
+    ``sims`` (batch, n_queries), the k + 1 candidates first on (sim
+    desc with NaN last, cid) — one spare for the self-match filtered
+    after the cut. A stable sort by cid, then one stable sort of every
+    column by -sim, keeps exactly the rows a per-query
+    ``lexsort((cids, -sims[:, j]))`` keeps, ties at the cut included.
+    Columns: qid, cid, sim."""
+    by_cid = np.argsort(cids, kind="stable")
+    sims, cids = sims[by_cid], cids[by_cid]
+    order = np.argsort(-sims, axis=0, kind="stable")[: k + 1]
+    return pd.DataFrame(
+        {
+            "qid": np.tile(qids, len(order)),
+            "cid": cids[order].ravel(),
+            "sim": np.take_along_axis(sims, order, axis=0).ravel(),
+        }
+    )
 
 
 def _ranked_topk(sims: DataFrame, k: int) -> DataFrame:
@@ -125,6 +176,40 @@ def make_hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((nbits, dim)).tolist()
 
 
+def _bucket_map(
+    id_col: str, vec_col: str, out_id: str,
+    dim: int, nbits: int, seed: int, n_tables: int,
+):
+    """The sign-LSH bucket kernel of lsh_cosine_topk and
+    embedding_dup_pairs_lsh, as a mapInPandas function: one (out_id,
+    tbl, bucket) row per vector and table, where bit b of table t's
+    bucket is 1 iff the vector's dot with hyperplane b of table t
+    (seeded seed + t) is >= 0. A zero vector (every dot 0) hashes to
+    each table's all-ones bucket; its similarities are NULL at
+    scoring."""
+    planes = np.asarray(
+        [make_hyperplanes(dim, nbits, seed + t) for t in range(n_tables)]
+    ).reshape(-1, dim)
+    weights = 1 << np.arange(nbits, dtype=np.int64)
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            m, _ = _vec_matrix(pdf[vec_col])
+            bits = (m @ planes.T >= 0).reshape(len(m), n_tables, nbits)
+            tables = np.arange(n_tables, dtype=np.int32)
+            yield pd.DataFrame(
+                {
+                    out_id: np.tile(pdf[id_col].to_numpy(), n_tables),
+                    "tbl": np.repeat(tables, len(m)),
+                    "bucket": (bits @ weights).T.ravel(),
+                }
+            )
+
+    return assign
+
+
 def lsh_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -152,54 +237,30 @@ def lsh_cosine_topk(
     vector bytes; per-table bucket occupancy is controlled
     independently by nbits (suggest_lsh_nbits sizes it to corpus).
     """
-    # Bucket assignment is an Arrow-batched numpy matmul per table,
-    # not a Column expression tree: the HOF form (n_tables × nbits
-    # chained zip_with/aggregate dots) was CODEGEN-bound — measured
-    # 4.8 s to first execution at sf0.1 (4 tables × 8 bits × dim 64)
-    # vs 0.9 s for this map, with identical warm per-row cost (the
-    # generated method is enormous and compiles once per distinct
-    # expression tree, so every fresh plan pays it; the matmul pays
-    # nothing). Sign semantics match the HOF fold up to IEEE
-    # summation order — identical vectors always agree (the planted
-    # oracle guarantee), and bucket ids stay deterministic at any
-    # parallelism (plane matrices are driver-seeded constants).
-    mats = [
-        np.asarray(make_hyperplanes(dim, nbits, seed + t), dtype=np.float64)
-        for t in range(n_tables)
-    ]
-    weights = (1 << np.arange(nbits)).astype(np.int64)
-
-    def _bucket_map(out_id: str):
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                m = np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                ids = pdf[id_col].to_numpy()
-                outs = []
-                for t, mat in enumerate(mats):
-                    buckets = ((m @ mat.T) >= 0) @ weights
-                    outs.append(
-                        pd.DataFrame(
-                            {out_id: ids, "tbl": t, "bucket": buckets}
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True)
-
-        return assign
-
+    # Bucket assignment is one Arrow-batched numpy matmul over every
+    # table's planes (_bucket_map), not a Column expression tree: the
+    # HOF form (n_tables × nbits chained zip_with/aggregate dots) was
+    # CODEGEN-bound — measured 4.8 s to first execution at sf0.1 (4
+    # tables × 8 bits × dim 64) vs 0.9 s for this map, with identical
+    # warm per-row cost (the generated method is enormous and compiles
+    # once per distinct expression tree, so every fresh plan pays it;
+    # the matmul pays nothing). Sign semantics match the HOF fold up
+    # to IEEE summation order — identical vectors always agree (the
+    # planted oracle guarantee), and bucket ids stay deterministic at
+    # any parallelism (plane matrices are driver-seeded constants).
+    #
     # declare the id field with the INPUT's type — hardcoding long
     # would narrow the public id_col contract (string/decimal ids
     # worked in the pre-Arrow Column form; round-11 review finding)
     q_id_t = queries.schema[id_col].dataType.simpleString()
     c_id_t = corpus.schema[id_col].dataType.simpleString()
     q_buckets = queries.select(id_col, vec_col).mapInPandas(
-        _bucket_map("qid"), f"qid {q_id_t}, tbl int, bucket long"
+        _bucket_map(id_col, vec_col, "qid", dim, nbits, seed, n_tables),
+        f"qid {q_id_t}, tbl int, bucket long",
     )
     c_buckets = corpus.select(id_col, vec_col).mapInPandas(
-        _bucket_map("cid"), f"cid {c_id_t}, tbl int, bucket long"
+        _bucket_map(id_col, vec_col, "cid", dim, nbits, seed, n_tables),
+        f"cid {c_id_t}, tbl int, bucket long",
     )
     candidates = (
         c_buckets.join(F.broadcast(q_buckets), ["tbl", "bucket"])
@@ -215,13 +276,6 @@ def lsh_cosine_topk(
         .select("qid", "cid", cosine("qe", "ce").alias("sim"))
     )
     return _ranked_topk(sims, k)
-
-
-def _normed_matrix(pdf: pd.DataFrame, vec_col: str) -> np.ndarray:
-    m = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    n = np.linalg.norm(m, axis=1, keepdims=True)
-    n[n == 0] = 1.0  # zero vectors → sim 0, not NaN
-    return m / n
 
 
 def embedding_dup_pairs(
@@ -286,7 +340,8 @@ def embedding_dup_pairs(
         b = a if diagonal else pdf[pdf["side"] == 1]
         if a.empty or b.empty:
             return empty
-        ma, mb = _normed_matrix(a, "v"), _normed_matrix(b, "v")
+        ma, _ = _vec_matrix(a["v"], normalize=True)
+        mb = ma if diagonal else _vec_matrix(b["v"], normalize=True)[0]
         sims = np.round(ma @ mb.T, 5)
         aids, bids = a["vid"].to_numpy(), b["vid"].to_numpy()
         if diagonal:
@@ -369,45 +424,21 @@ def embedding_dup_pairs_lsh(
     Size ``nbits`` with suggest_lsh_nbits(corpus size) — a fixed
     bucket space makes the candidate set quadratic in n.
     """
-    # All band hyperplanes in one matrix; bucket assignment is ONE
+    # Bucket assignment is the lsh_cosine_topk kernel: ONE
     # Arrow-vectorized map emitting n_bands keyed copies per row.
     # (A Column-expression form via random_hyperplane_bucket exists
     # but Catalyst interprets HOF dot products per element — measured
     # ~5× slower at 64 dims; numpy matmul is the narrow-map analog.)
-    all_planes = np.vstack(
-        [make_hyperplanes(dim, nbits, seed + b) for b in range(n_bands)]
-    )
-    weights = 2 ** np.arange(nbits, dtype=np.int64)
-    nb = n_bands
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            signs = (m @ all_planes.T) >= 0  # (n, nb*nbits)
-            vids = pdf[id_col].to_numpy()
-            frames = []
-            for band in range(nb):
-                bucket = signs[:, band * nbits : (band + 1) * nbits] @ weights
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vid": vids,
-                            "bk": bucket + (band << nbits),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
     keyed = df.select(id_col, vec_col).mapInPandas(
-        assign, "vid long, bk long"
+        _bucket_map(id_col, vec_col, "vid", dim, nbits, seed, n_bands),
+        "vid long, tbl int, bucket long",
     )
     a, b = keyed.alias("a"), keyed.alias("b")
     cand_ids = (
         a.join(
             b,
-            (F.col("a.bk") == F.col("b.bk"))
+            (F.col("a.tbl") == F.col("b.tbl"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.vid") < F.col("b.vid")),
         )
         .select(
@@ -442,8 +473,8 @@ def embedding_dup_pairs_lsh(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ma = _normed_matrix(pdf, "va")
-            mb = _normed_matrix(pdf, "vb")
+            ma, _ = _vec_matrix(pdf["va"], normalize=True)
+            mb, _ = _vec_matrix(pdf["vb"], normalize=True)
             sims = np.round(np.einsum("ij,ij->i", ma, mb), 5)
             keep = sims >= threshold
             if keep.any():
@@ -472,19 +503,22 @@ def train_ivf_centroids(
     only thousands of points); training is O(sample · k · iters) on
     the driver, and the resulting (k × dim) matrix broadcasts with
     the plan.
+
+    Zero vectors have no direction to train on and are dropped from
+    the sample; a cell whose mean has no direction keeps its previous
+    centroid, as an empty cell does.
     """
     rows = df.select(vec_col).limit(sample).collect()
-    x = np.vstack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x, zero = _vec_matrix([r[0] for r in rows], normalize=True)
+    x = x[~zero]
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(len(x), size=min(n_clusters, len(x)), replace=False)]
     for _ in range(n_iters):
         assign = np.argmax(x @ cents.T, axis=1)
-        for c in range(len(cents)):
-            members = x[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                cents[c] = v / max(np.linalg.norm(v), 1e-12)
+        live = np.unique(assign)
+        means = [x[assign == c].mean(axis=0) for c in live]
+        unit, zero = _vec_matrix(means, normalize=True)
+        cents[live[~zero]] = unit[~zero]
     return cents
 
 
@@ -516,7 +550,8 @@ def train_ivf_centroids_distributed(
     upstream repartition regroups those float sums, which can move
     centroids by float-rounding noise — inherent to any distributed
     float k-means; the decimal reduction removes the scheduling
-    (reduce-order) source, not the layout one.
+    (reduce-order) source, not the layout one. Zero vectors are
+    dropped, as in train_ivf_centroids.
     """
     cents = train_ivf_centroids(
         df, vec_col, n_clusters, n_iters=3, seed=seed
@@ -532,12 +567,8 @@ def train_ivf_centroids_distributed(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                m = np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                m = m / np.maximum(
-                    np.linalg.norm(m, axis=1, keepdims=True), 1e-12
-                )
+                m, zero = _vec_matrix(pdf[vec_col], normalize=True)
+                m = m[~zero]
                 assign = np.argmax(m @ c.T, axis=1)
                 np.add.at(sums, assign, m)
                 counts += np.bincount(assign, minlength=len(c))
@@ -577,11 +608,9 @@ def train_ivf_centroids_distributed(
             acc[r["cell"], r["pos"]] = float(r["sx"])
             if r["pos"] == 0:
                 counts[r["cell"]] = int(r["np"])
-        live = counts > 0
-        means = acc[live] / counts[live, None]
-        new[live] = means / np.maximum(
-            np.linalg.norm(means, axis=1, keepdims=True), 1e-12
-        )
+        live = np.flatnonzero(counts)
+        unit, zero = _vec_matrix(acc[live] / counts[live, None], normalize=True)
+        new[live[~zero]] = unit[~zero]
         bc.destroy()
         if np.allclose(new, cents, atol=1e-9):
             cents = new
@@ -613,6 +642,9 @@ def ivf_cosine_topk(
 
     Scale: the shuffle is an equi join on cell id — the corpus is
     never cross-joined, and raising n_probe trades cost for recall.
+
+    A zero vector (a NaN row) lands in cell 0 and probes cells
+    0 .. n_probe-1; the JVM ``cosine()`` scores it NULL.
     """
     if train == "distributed":
         cents = train_ivf_centroids_distributed(
@@ -626,8 +658,7 @@ def ivf_cosine_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+            m, _ = _vec_matrix(pdf[vec_col], normalize=True)
             yield pd.DataFrame(
                 {
                     "cid": pdf[id_col].to_numpy(),
@@ -644,22 +675,16 @@ def ivf_cosine_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            sims = m @ cents.T
-            cells = np.argsort(-sims, axis=1)[:, :n_probe]
-            out = []
-            for r in range(len(pdf)):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": pdf[id_col].iloc[r],
-                            "cell": cells[r],
-                            "qe": [pdf[vec_col].iloc[r]] * n_probe,
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
+            m, _ = _vec_matrix(pdf[vec_col], normalize=True)
+            cells = np.argsort(-(m @ cents.T), axis=1, kind="stable")
+            row = np.repeat(np.arange(len(pdf)), n_probe)
+            yield pd.DataFrame(
+                {
+                    "qid": pdf[id_col].to_numpy()[row],
+                    "cell": cells[:, :n_probe].ravel(),
+                    "qe": pdf[vec_col].to_numpy()[row],
+                }
+            )
 
     q = queries.select(id_col, vec_col).mapInPandas(
         probe_cells, f"qid long, cell int, qe {queries.schema[vec_col].dataType.simpleString()}"
@@ -682,15 +707,14 @@ def cosine_topk_pandas(
     """Arrow-vectorized brute-force top-k (mapInPandas + numpy matmul
     per batch, heap-merged by the final window). Same output contract
     as cosine_topk; preferred when vectors are wide enough that
-    per-element Column expressions dominate.
+    per-element Column expressions dominate. A zero vector's sim is
+    NaN here, which reaches Spark as NULL, the JVM route's value.
     """
     qrows = queries.select(id_col, vec_col).collect()
     qids = np.array([r[0] for r in qrows])
-    qmat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0  # zero vectors → sim 0, not NaN (NaN ranks first!)
+    qmat, _ = _vec_matrix([r[1] for r in qrows], normalize=True)
     # ship the query matrix once per executor, not pickled per task
-    bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat / qn))
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     out_schema = "qid long, cid long, sim double"
 
@@ -699,28 +723,14 @@ def cosine_topk_pandas(
         for pdf in batches:
             if pdf.empty:
                 continue
-            cmat = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cn = np.linalg.norm(cmat, axis=1, keepdims=True)
-            cn[cn == 0] = 1.0
+            cmat, _ = _vec_matrix(pdf[vec_col], normalize=True)
             # round BEFORE the per-batch cut: the final ranking orders
             # by (rounded sim desc, cid), so the partial top-k must use
             # the same key or a candidate cut pre-rounding could tie
             # post-rounding with a retained row and lose its cid
             # tie-break (same contract as cosine_topk).
-            sims = np.round((cmat / cn) @ qnorm.T, 5)  # (batch, nq)
-            cids = pdf[id_col].to_numpy()
-            kk = min(k + 1, sims.shape[0])
-            frames = []
-            for j, qid in enumerate(b_qids):
-                order = np.lexsort((cids, -sims[:, j]))[:kk]
-                frames.append(
-                    pd.DataFrame(
-                        {"qid": qid, "cid": cids[order], "sim": sims[order, j]}
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            sims = np.round(cmat @ qnorm.T, 5)  # (batch, nq)
+            yield _batch_topk(sims, pdf[id_col].to_numpy(), b_qids, k)
 
     sims = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
     sims = sims.filter(F.col("cid") != F.col("qid"))

@@ -11,6 +11,7 @@ import os
 import tracemalloc
 import zlib
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -241,3 +242,88 @@ def test_one_decode_wrapper_and_one_error_policy():
     assert callers == {"_decode_map", "extract_features"}
     assert tries == []
     assert handlers == [("_decode_batch", "_UNDECODABLE")]
+
+
+def _is_sane_row(g):
+    """Finite features, and a width and height of at least 1 where the
+    codec reports them."""
+    dims = [c for c in ("width", "height") if c in g.columns]
+    return bool(
+        np.isfinite(g.to_numpy(dtype=float)).all()
+        and (g[dims] >= 1).all(axis=None)
+    )
+
+
+@pytest.mark.parametrize(
+    "extract, synthesize", _CODECS, ids=[e.__name__ for e, _ in _CODECS]
+)
+def test_header_byte_mutations_yield_sane_rows_or_one_null_row(
+    monkeypatch, extract, synthesize
+):
+    """Each of the first 48 bytes set to 0x00, 0x7F and 0xFF in turn:
+    every payload decodes to one all-NULL row or to finite features
+    with width and height >= 1, and the batch never raises."""
+    rows, fields = _wiring(monkeypatch, extract)
+    full = synthesize(3)
+    payloads = []
+    for at in range(min(48, len(full))):
+        for value in (0x00, 0x7F, 0xFF):
+            mutant = bytearray(full)
+            mutant[at] = value
+            payloads.append(bytes(mutant))
+    groups = _decode(rows, fields, payloads)
+    bad = [
+        (k // 3, payloads[k][k // 3])
+        for k, g in groups.items()
+        if not (_is_null_row(g) or _is_sane_row(g))
+    ]
+    assert not bad, f"(byte offset, value) pairs with a bad row: {bad}"
+
+
+def test_zero_size_ppm_yields_one_null_row(monkeypatch):
+    """PPM's ASCII header is out of the byte sweep's reach: no single
+    0x00/0x7F/0xFF byte spells a 0."""
+    rows, fields = _wiring(monkeypatch, mm.extract_image_features)
+    groups = _decode(
+        rows,
+        fields,
+        [mm.synthesize_ppm(3, width=0), mm.synthesize_ppm(3, height=0)],
+    )
+    assert _is_null_row(groups[0]) and _is_null_row(groups[1])
+
+
+def test_raster_limit_is_max_pixels(monkeypatch):
+    """A raster of exactly MAX_PIXELS pixels decodes; one more row is
+    a NULL row."""
+    rows, fields = _wiring(monkeypatch, mm.extract_png_features)
+    monkeypatch.setattr(mm, "MAX_PIXELS", 16 * 8)
+    groups = _decode(
+        rows, fields, [mm.synthesize_png(3, 16, 8), mm.synthesize_png(3, 16, 9)]
+    )
+    assert groups[0]["width"].tolist() == [16]
+    assert _is_null_row(groups[1])
+
+
+def test_png_over_max_pixels_is_rejected_before_it_allocates(monkeypatch):
+    """A well-formed PNG of 1024 x 1025 all-zero pixels (a few KB on
+    the wire, one row past MAX_PIXELS) is a NULL row, decided from
+    IHDR before the pixel data is inflated."""
+    assert 1024 * 1025 > mm.MAX_PIXELS >= 1024 * 1024
+    ihdr = bytes.fromhex("00000400" "00000401" "0802000000")
+    pixels = zlib.compress(bytes(1025 * (1024 * 3 + 1)), 9)
+    payload = (
+        mm._PNG_SIG
+        + mm._png_chunk(b"IHDR", ihdr)
+        + mm._png_chunk(b"IDAT", pixels)
+        + mm._png_chunk(b"IEND", b"")
+    )
+    assert len(payload) < 16 * 1024
+    rows, fields = _wiring(monkeypatch, mm.extract_png_features)
+    tracemalloc.start()
+    try:
+        groups = _decode(rows, fields, [payload])
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert _is_null_row(groups[0])
+    assert peak < 1024 * 1024, peak

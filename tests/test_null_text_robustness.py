@@ -396,3 +396,20 @@ COPY (
 def test_parity_under_heavy_key_skew(name, spark, skewed_sf_dir):
     res = compare_query(name, spark, skewed_sf_dir)
     assert res.ok, f"{name}: {res.detail}"
+
+
+def test_pandas_route_matches_jvm_route_on_degenerate_embeddings(
+    spark, degenerate_emb_sf_dir
+):
+    """q40 (Arrow/numpy route) returns q38's rows (JVM route): vec_id
+    0, one of the ten queries, is all-zero, so every one of its sims
+    is NULL on both routes, and the tiny vectors score as usual."""
+    from car_insurance_data_pipeline_spark_spark.plans.catalog import specs
+
+    def rows(name):
+        df = specs()[name].fn(spark, degenerate_emb_sf_dir)
+        return sorted((r.qid, r.rn, r.cid, r.sim) for r in df.collect())
+
+    jvm = rows("q38_cosine_topk")
+    assert rows("q40_cosine_topk_pandas") == jvm
+    assert [r[3] for r in jvm if r[0] == 0] == [None] * 5

@@ -3,6 +3,8 @@ against the exact JVM-side baseline (q38)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -343,3 +345,128 @@ def test_column_bucket_matches_numpy_backend(spark):
     batched = ((m @ mat.T) >= 0) @ weights
     for r, bb in zip(rows, batched):
         assert jvm[r.vec_id] == int(bb), f"batched diverged at {r.vec_id}"
+
+
+def _by_rank(df):
+    return sorted((r.qid, r.rn, r.cid, r.sim) for r in df.collect())
+
+
+@pytest.mark.parametrize("dim", [2, 128])
+def test_routes_agree_on_zero_vectors_and_negative_scores(spark, dim):
+    """jvm, pandas and auto return the same rows on a corpus whose
+    zero vectors (ids 2 and 9) sit among mostly negative scores; one
+    query (id 2) is itself the zero vector, so all its sims are NULL
+    and its candidates come in cid order."""
+    import numpy as np
+
+    from car_insurance_data_pipeline_spark_spark.functions.vectors import (
+        with_vector_dim,
+    )
+
+    rng = np.random.default_rng(11)
+    u = rng.standard_normal(dim)
+    vecs = (
+        [u, np.zeros(dim)]
+        + [-u + 0.3 * rng.standard_normal(dim) for _ in range(6)]
+        + [np.zeros(dim)]
+        + [rng.standard_normal(dim) for _ in range(3)]
+    )
+    rows = [(i + 1, v.tolist()) for i, v in enumerate(vecs)]
+    df = with_vector_dim(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        "embedding",
+        dim,
+    )
+    q = df.filter(F.col("vec_id").isin(1, 2))
+    jvm = _by_rank(cosine_topk(q, df, k=11, dispatch="jvm"))
+    assert _by_rank(cosine_topk(q, df, k=11, dispatch="pandas")) == jvm
+    assert _by_rank(cosine_topk(q, df, k=11, dispatch="auto")) == jvm
+    real = [r for r in jvm if r[0] == 1]
+    assert [r[2] for r in real[-2:]] == [2, 9]
+    assert all(r[3] is None for r in real[-2:])
+    assert all(r[3] is not None for r in real[:-2])
+    assert sum(r[3] < 0 for r in real[:-2]) >= 6
+    zero_q = [r for r in jvm if r[0] == 2]
+    assert [(r[2], r[3]) for r in zero_q] == [
+        (c, None) for c in [1, *range(3, 13)]
+    ]
+
+
+def test_batch_topk_keeps_the_lexsort_rows_at_ties():
+    """The vectorized per-batch cut keeps exactly the rows a
+    per-query lexsort on (-sim, cid) keeps, with heavy ties, repeated
+    cids and NaN scores (which rank last). Spark-free."""
+    import numpy as np
+
+    from car_insurance_data_pipeline_spark_spark.operators.similarity import (
+        _batch_topk,
+    )
+
+    rng = np.random.default_rng(5)
+    sims = np.round(rng.uniform(-1, 1, (200, 7)), 1)
+    sims[rng.uniform(size=sims.shape) < 0.1] = np.nan
+    cids = rng.integers(0, 150, 200)
+    qids = np.arange(100, 107)
+    for k in (0, 4, 30, 250):
+        got = _batch_topk(sims, cids, qids, k)
+        for j, qid in enumerate(qids):
+            key = np.where(np.isnan(sims[:, j]), np.inf, -sims[:, j])
+            want = np.lexsort((cids, key))[: k + 1]
+            mine = got[got.qid == qid]
+            assert mine.cid.tolist() == cids[want].tolist()
+            np.testing.assert_array_equal(mine.sim.to_numpy(), sims[want, j])
+
+
+_KERNEL_HELPERS = {"_vec_matrix", "_batch_topk"}
+
+
+def _hand_rolled_kernel_sites(path):
+    """Every np.vstack / np.lexsort call, ``1e-12`` norm clamp and
+    ``n[n == 0]`` zero-norm patch outside the two kernel helpers."""
+    import ast
+
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), filename=path)
+    sites = []
+    for top in tree.body:
+        if getattr(top, "name", None) in _KERNEL_HELPERS:
+            continue
+        for node in ast.walk(top):
+            hit = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "np"
+                and node.func.attr in ("vstack", "lexsort")
+            ) or (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, float)
+                and node.value == 1e-12
+            ) or (
+                isinstance(node, ast.Subscript)
+                and isinstance(node.slice, ast.Compare)
+                and isinstance(node.slice.ops[0], ast.Eq)
+                and ast.unparse(node.slice.left) == ast.unparse(node.value)
+            )
+            if hit:
+                sites.append(
+                    f"{os.path.basename(path)}:{node.lineno}: {ast.unparse(node)}"
+                )
+    return sites
+
+
+def test_vector_kernels_go_through_the_two_helpers():
+    """similarity.py, pq.py and clustering.py build vector matrices
+    only with _vec_matrix, apply only its zero-vector rule, and cut
+    per-batch top-k only with _batch_topk."""
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "car_insurance_data_pipeline_spark_spark",
+        "operators",
+    )
+    sites = [
+        site
+        for name in ("similarity.py", "pq.py", "clustering.py")
+        for site in _hand_rolled_kernel_sites(os.path.join(ops, name))
+    ]
+    assert not sites, "hand-rolled kernel steps:\n" + "\n".join(sites)
